@@ -168,9 +168,10 @@ object Pipeline {
     * processed yet, oldest first (dims must grow in day order for stable
     * ids — the reference's `catchup=False` simply loses missed days;
     * `ExternalTaskSensor` ordering is call order here). "Done" is read
-    * from the partition DIRECTORY NAMES of the royalties mart — the LAST
-    * table [[runDaily]] writes — so a run that crashed partway (ODS
-    * landed, star/marts missing) is correctly re-run, not skipped;
+    * from the LIVE partitions of the royalties mart's manifest — the
+    * LAST table [[runDaily]] writes — so a run that crashed partway
+    * (ODS landed, star/marts missing, or mart files staged in but never
+    * committed) is correctly re-run, not skipped;
     * every write is an idempotent upsert, so the repair replays safely.
     * Planning is a file listing, O(days), not a data scan. Landed dirs
     * with no JSON files yet (created-but-unwritten drops) are skipped
@@ -251,11 +252,13 @@ object Pipeline {
     graft.engine.Manifest.read(spark, path)
   }
 
+  /** The dim's current snapshot, or an empty dim when it has no
+    * committed version yet (orphans of a crashed first write included).
+    */
   private def readOrEmpty(spark: SparkSession, path: String,
-      candidates: DataFrame, idCol: String, keys: Seq[String]): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) graft.engine.Manifest.read(spark, path)
+      candidates: DataFrame, idCol: String, keys: Seq[String]): DataFrame =
+    if (graft.engine.Manifest.currentVersion(spark, path).isDefined)
+      graft.engine.Manifest.read(spark, path)
     else {
       val keySchema = StructType(candidates.select(keys.map(col): _*).schema
         .fields.map(_.copy(nullable = true)))
@@ -264,5 +267,4 @@ object Pipeline {
           org.apache.spark.sql.types.LongType, nullable = false) +: keySchema.fields)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
-  }
 }

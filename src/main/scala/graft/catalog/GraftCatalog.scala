@@ -168,13 +168,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!tableExists(ident))
       throw new NoSuchTableException(
         name() +: ident.namespace.toSeq :+ ident.name)
-    val path = tablePath(ident)
-    // one-time `#flen` ledger backfill for pre-round-16 snapshots
-    // (round 17): the listing this load was about to pay anyway is
-    // committed back, and every later load resolves zero-listing
-    Manifest.currentVersion(spark, path)
-      .foreach(v => Manifest.maybeBackfillLens(spark, path, v))
-    GraftTable(spark, fullName(ident), path, asOfVersion = None)
+    GraftTable(spark, fullName(ident), tablePath(ident), asOfVersion = None)
   }
 
   /** `VERSION AS OF v` — the SQL surface of [[Manifest.readAsOf]]. */

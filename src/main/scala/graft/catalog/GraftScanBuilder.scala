@@ -35,7 +35,7 @@ import graft.engine.Manifest
 final class GraftScanBuilder(
     spark: SparkSession,
     path: String,
-    version: Option[Long],
+    version: Long,
     snapshotFiles: Seq[String],
     initial: ScanBuilder,
     rebuild: Seq[String] => ScanBuilder)
@@ -57,19 +57,19 @@ final class GraftScanBuilder(
     // hidden-transform directory values (round 15 — day/bucket dirs
     // matched against the SOURCE-column predicates)
     val rs = filters.flatMap(ranges)
-    val statsKept: Set[String] = version match {
-      case Some(v) if rs.nonEmpty =>
-        Manifest.planSkippingAsOf(spark, path, v, rs)._1.toSet
-      case _ => snapshotFiles.toSet
-    }
+    val statsKept: Set[String] =
+      if (rs.nonEmpty)
+        Manifest.planSkippingAsOf(spark, path, version, rs)._1.toSet
+      else snapshotFiles.toSet
     val ptKept: Set[String] =
       graft.engine.PartitionTransforms.pruneFiles(snapshotFiles, filters)
         .toSet
     val kept = snapshotFiles.filter(f => statsKept(f) && ptKept(f))
     if (kept.size < snapshotFiles.size) {
-      // never build the parquet table over zero paths (schema
-      // inference has nothing to read): keep one file — the post-scan
-      // filter still eliminates its rows
+      // never build the scan over zero files (the dir-derived
+      // partition columns, and an unpinned table's footer schema, come
+      // from the files): keep one file — the post-scan filter still
+      // eliminates its rows
       val keep = if (kept.nonEmpty) kept else snapshotFiles.take(1)
       pruned = (keep.size, snapshotFiles.size)
       delegate = rebuild(keep)

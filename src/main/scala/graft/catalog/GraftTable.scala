@@ -8,8 +8,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsDeleteV2, SupportsRead, S
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -22,10 +20,11 @@ import graft.engine.{Manifest, Upsert}
   * snapshot even while writers commit concurrently: the SQL twin of
   * [[Manifest.read]]'s snapshot isolation.
   *
-  * Reads delegate to Spark's stock parquet DSv2 table over the
-  * snapshot's EXPLICIT absolute file list (`basePath` keeps partition
-  * column derivation identical to a directory read), wrapped by
-  * [[GraftScanBuilder]] for manifest-stats file skipping. Writes and
+  * Reads are Spark's stock parquet DSv2 scan over the manifest-served
+  * file index ([[org.apache.spark.sql.graftshim.ManifestScan]]: zero
+  * listing; partition columns derived from directory names exactly as
+  * a directory read derives them), wrapped by [[GraftScanBuilder]] for
+  * manifest-stats file skipping. Writes and
   * deletes go through the engine's snapshot-committing verbs — never
   * through the parquet table, whose directory-append path would land
   * files the manifest (correctly) ignores.
@@ -36,33 +35,25 @@ final case class GraftTable(spark: SparkSession, tableName: String,
     extends Table with SupportsRead with SupportsWrite
     with SupportsDeleteV2 {
 
-  /** The version this table object serves; None only for a
-    * pre-manifest (adopted) directory.
-    */
-  private val snapshotVersion: Option[Long] =
-    asOfVersion.orElse(Manifest.currentVersion(spark, path))
+  /** The version this table object serves. */
+  private val snapshotVersion: Long =
+    asOfVersion.getOrElse(Manifest.requireVersion(spark, path))
 
-  private val relFiles: Seq[String] = snapshotVersion match {
-    case Some(v) => Manifest.filesAsOf(spark, path, v)
-    case None => Manifest.listDataFiles(spark, path)
-  }
+  private val relFiles: Seq[String] =
+    Manifest.filesAsOf(spark, path, snapshotVersion)
 
   private val pinnedSchema: Option[StructType] =
-    snapshotVersion.flatMap(Manifest.schemaAsOf(spark, path, _))
+    Manifest.schemaAsOf(spark, path, snapshotVersion)
 
-  /** `#flen` ledger of the served version (round 16): complete coverage
-    * + a pinned schema ⇒ scans are built over a manifest-served file
-    * index — ZERO filesystem listing at resolution (ManifestScan
-    * scaladoc). Pre-round-16 snapshots read via the legacy ParquetTable
-    * listing path.
+  /** `#flen` ledger of the served version: every scan is built over a
+    * manifest-served file index from it — ZERO filesystem listing at
+    * resolution (ManifestScan scaladoc).
     */
-  private val fileLens: Map[String, Long] =
-    snapshotVersion.map(Manifest.fileLengthsAsOf(spark, path, _))
-      .getOrElse(Map.empty)
+  private lazy val fileLens: Map[String, Long] =
+    Manifest.fileLengthsAsOf(spark, path, snapshotVersion)
 
-  private def servedSchema: Option[StructType] =
-    pinnedSchema.filter(_ => relFiles.nonEmpty &&
-      relFiles.forall(fileLens.contains)).map(widen)
+  private def served(files: Seq[String]): Seq[(String, Long)] =
+    Manifest.sized(path, files, fileLens)
 
   /** Deletion-vector pointers of the served snapshot (round 17).
     * Non-empty ⇒ SQL reads of this relation are swapped onto the
@@ -70,14 +61,12 @@ final case class GraftTable(spark: SparkSession, tableName: String,
     * stock parquet scan would resurrect merge-on-read-deleted rows.
     */
   private[graft] lazy val dvMap: Map[String, Manifest.DvPointer] =
-    snapshotVersion.map(Manifest.dvsAsOf(spark, path, _))
-      .getOrElse(Map.empty)
+    Manifest.dvsAsOf(spark, path, snapshotVersion)
 
   /** The snapshot version this table object serves (for the DV rule's
-    * version-exact re-read; None only for adopted directories, which
-    * can never carry DVs).
+    * version-exact re-read).
     */
-  private[graft] def servedVersion: Option[Long] = snapshotVersion
+  private[graft] def servedVersion: Long = snapshotVersion
 
   /** The served snapshot's table-relative file list — the matview
     * rewrite's scan normalization ([[graft.engine.MaterializedViews]])
@@ -102,13 +91,15 @@ final case class GraftTable(spark: SparkSession, tableName: String,
     */
   private[graft] def unionVariant: GraftTable = copy(exposeUnion = true)
 
-  private def widen(st: StructType): StructType =
-    if (!exposeUnion) st
-    else StructType(st.fields.toSeq.flatMap { f =>
-      f +: Manifest.priorNames(f)
-        .map(p => org.apache.spark.sql.types.StructField(
-          p, f.dataType, nullable = true))
-    })
+  /** The pinned schema as this variant reads it (None: the footer's). */
+  private def readSchema: Option[StructType] =
+    pinnedSchema.map(st =>
+      if (!exposeUnion) st
+      else StructType(st.fields.toSeq.flatMap { f =>
+        f +: Manifest.priorNames(f)
+          .map(p => org.apache.spark.sql.types.StructField(
+            p, f.dataType, nullable = true))
+      }))
 
   require(relFiles.nonEmpty || pinnedSchema.nonEmpty,
     s"table $tableName at $path: empty snapshot with no pinned schema — " +
@@ -132,37 +123,22 @@ final case class GraftTable(spark: SparkSession, tableName: String,
     new CaseInsensitiveStringMap(m)
   }
 
-  private[catalog] def delegate(files: Seq[String],
-      options: CaseInsensitiveStringMap): ParquetTable =
-    ParquetTable(tableName, spark, scanOptions(options),
-      files.map(f => s"$path/$f"),
-      pinnedSchema.map(widen), classOf[ParquetFileFormat])
-
-  private lazy val fullTable: ParquetTable =
-    delegate(relFiles, CaseInsensitiveStringMap.empty())
-
   override def name(): String = tableName
 
   /** The LOGICAL schema: hidden `ptx_*` transform directories (round
     * 15) never surface — scans prune to the requested logical columns,
     * so the derived dirs are not even read.
     */
-  override def schema(): StructType = {
-    val full = servedSchema match {
-      case Some(st) if relFiles.nonEmpty =>
-        org.apache.spark.sql.graftshim.ManifestScan.tableSchema(
-          spark, path, relFiles.map(f => f -> fileLens(f)), st)
-      case _ =>
-        if (relFiles.isEmpty) return widen(pinnedSchema.get)
-        fullTable.schema
-    }
-    StructType(full.fields.filterNot(f =>
+  override def schema(): StructType = logicalSchema
+
+  private lazy val logicalSchema: StructType =
+    StructType(org.apache.spark.sql.graftshim.ManifestScan.tableSchema(
+      spark, path, served(relFiles), readSchema).fields.filterNot(f =>
       graft.engine.PartitionTransforms.isDerived(f.name)))
-  }
 
   override def properties(): util.Map[String, String] =
-    (Map("provider" -> "graft", "location" -> path) ++
-      snapshotVersion.map(v => "version" -> v.toString)).asJava
+    Map("provider" -> "graft", "location" -> path,
+      "version" -> snapshotVersion.toString).asJava
 
   /** The table's partitioning as V2 transforms — identity columns as
     * themselves, hidden `ptx_*` dirs decoded back to their declaring
@@ -198,29 +174,21 @@ final case class GraftTable(spark: SparkSession, tableName: String,
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC)
 
+  /** Both the initial builder and any stats-pruned rebuild resolve
+    * through the manifest-served index, without touching the filesystem
+    * (an empty shell's scan is its pinned shape over zero files).
+    */
   override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder =
-    if (relFiles.isEmpty)
-      // a just-created empty table: scan its pinned shape, zero files
-      delegate(Seq.empty, options).newScanBuilder(scanOptions(options))
-    else servedSchema match {
-      case Some(st) =>
-        // manifest-served index: both the initial builder and any
-        // stats-pruned rebuild resolve without touching the filesystem
-        val commitTs = snapshotVersion
-          .flatMap(Manifest.commitTsAsOf(spark, path, _)).getOrElse(0L)
-        def build(files: Seq[String]): ScanBuilder =
-          org.apache.spark.sql.graftshim.ManifestScan.parquetScanBuilder(
-            spark, path, files.map(f => f -> fileLens(f)), st,
-            scanOptions(options), commitTs)._2
-        new GraftScanBuilder(spark, path, snapshotVersion, relFiles,
-          build(relFiles), build)
-      case None =>
-        new GraftScanBuilder(spark, path, snapshotVersion, relFiles,
-          fullTable.newScanBuilder(scanOptions(options)),
-          kept => delegate(kept, options)
-            .newScanBuilder(scanOptions(options)))
-    }
+      options: CaseInsensitiveStringMap): ScanBuilder = {
+    val commitTs =
+      Manifest.commitTsAsOf(spark, path, snapshotVersion).getOrElse(0L)
+    def build(files: Seq[String]): ScanBuilder =
+      org.apache.spark.sql.graftshim.ManifestScan.parquetScanBuilder(
+        spark, path, served(files), readSchema, scanOptions(options),
+        commitTs)._2
+    new GraftScanBuilder(spark, path, snapshotVersion, relFiles,
+      build(relFiles), build)
+  }
 
   // ---- INSERT INTO / INSERT OVERWRITE (V1 fallback -> engine verbs) --
 

@@ -21,7 +21,8 @@ object Compaction {
     * daily-append regime's numbers — after ~16 small daily commits the
     * pass fires once, replaces them with target-sized files, and the
     * counter effectively resets (compacted files are no longer small).
-    * Deciding costs ONE file listing of the live set; no data I/O.
+    * Deciding reads the manifest's `#flen` ledger: no listing, no stat,
+    * no data I/O.
     *
     * Round 18 adds the DELETION-VECTOR dimension: a merge-on-read
     * delete trickle grows DV rows on large, healthy-sized files — the
@@ -48,7 +49,7 @@ object Compaction {
     * publishes, so small-file debt self-heals on the write path the
     * reference would handle with a separate Airflow maintenance DAG.
     * Returns Some((before, after)) when a compaction ran, None when the
-    * policy didn't trip (including: table absent / pre-manifest).
+    * policy didn't trip (including: no committed version yet).
     * Lease semantics are [[compact]]'s own (whole-table writer lease;
     * readers snapshot-isolated throughout).
     */
@@ -58,10 +59,8 @@ object Compaction {
       statsCols: Seq[String] = Nil,
       clusterBy: Seq[String] = Nil,
       policy: AutoPolicy = AutoPolicy()): Option[(Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = Manifest.currentVersion(spark, path)
-    if (!fs.exists(p) || cur.isEmpty) return None
+    if (cur.isEmpty) return None
     // DV-debt trip (round 18): absorb merge-on-read deletion vectors
     // before their broadcast grows toward the hard cap — metadata-only
     // decision from the #dv headers, independent of file count/size
@@ -73,19 +72,14 @@ object Compaction {
         return Some(compact(spark, path, partitionCol, targetBytesPerFile,
           statsCols, clusterBy))
     }
-    val live = Manifest.currentLive(spark, path)
+    val live = Manifest.filesAsOf(spark, path, cur.get)
     if (live.size < policy.minFiles) return None
-    // Tolerant stat (ADVICE r13): this probe holds neither the lease nor
-    // the commit lock, so a file retired by a concurrent rewriter and
-    // vacuumed between the live listing and the stat can be gone —
-    // treat it as "not small" and move on. The decision is a heuristic;
-    // compact() itself re-reads the live set under the lease.
-    val sizes = live.flatMap { f =>
-      try Some(fs.getFileStatus(
-        new org.apache.hadoop.fs.Path(s"$path/$f")).getLen)
-      catch { case _: java.io.FileNotFoundException => None }
-    }
-    val small = sizes.count(_ < policy.smallBytes)
+    // sizes from the immutable ledger of the version just resolved, so a
+    // concurrent rewrite+vacuum cannot pull a file out from under the
+    // decision; compact() itself re-reads the live set under the lease
+    val small = Manifest.sized(path, live,
+      Manifest.fileLengthsAsOf(spark, path, cur.get))
+      .count(_._2 < policy.smallBytes)
     if (small.toDouble < policy.smallFraction * live.size) None
     else Some(compact(spark, path, partitionCol, targetBytesPerFile,
       statsCols, clusterBy))
@@ -118,14 +112,15 @@ object Compaction {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     // size/count the LIVE snapshot, not the directory: under manifest
-    // management the dir also holds prior-version files awaiting vacuum
-    val before = Manifest.currentLive(spark, path)
-    val totalBytes = before
-      .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$path/$f")).getLen)
-      .sum
+    // management the dir also holds prior-version files awaiting vacuum.
+    // Rows, file list and sizes all come from ONE version
+    val v = Manifest.requireVersion(spark, path)
+    val before = Manifest.filesAsOf(spark, path, v)
+    val totalBytes = Manifest.sized(path, before,
+      Manifest.fileLengthsAsOf(spark, path, v)).map(_._2).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytesPerFile).toInt)
 
-    val df0 = Manifest.read(spark, path)
+    val df0 = Manifest.readAsOf(spark, path, v)
     // layout-aware (round 15): a compaction must NEVER flatten the
     // table's physical layout — identity dirs and hidden ptx_*
     // transform dirs alike. The caller's partitionCol keeps its legacy
@@ -179,17 +174,13 @@ object Compaction {
       // compaction is the natural moment to (re)build skipping stats:
       // the files just changed shape, and the footer read is O(files)
       val stats = FileStats.collect(spark, path, moved, statsCols)
-      if (Manifest.currentVersion(spark, path).isEmpty)
-        // pre-manifest adoption commit (single-writer)
-        Manifest.commit(spark, path, moved, stats)
-      else
-        // optimistic: retire exactly the files this pass read — a
-        // lease-less append landing mid-compaction survives the commit
-        // (uncompacted until the next pass) instead of being dropped
-        // by a whole-live-set replacement
-        Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
-          scope = before.toSet, expected = before.toSet,
-          retire = before.toSet, add = moved, stats = stats))
+      // optimistic: retire exactly the files this pass read — a
+      // lease-less append landing mid-compaction survives the commit
+      // (uncompacted until the next pass) instead of being dropped by a
+      // whole-live-set replacement
+      Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
+        scope = before.toSet, expected = before.toSet,
+        retire = before.toSet, add = moved, stats = stats))
       (before.size.toLong, moved.size.toLong)
     } finally {
       fs.delete(staging, true); ()

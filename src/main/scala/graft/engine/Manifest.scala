@@ -27,8 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    A reader either lists the new version file or it doesn't; there
   *    is no intermediate state.
   *  - READ = take the HIGHEST committed version, load its file list,
-  *    read exactly those files (`basePath` preserves partition-column
-  *    derivation and partition pruning). Data files are NEVER mutated
+  *    read exactly those files through the manifest-served file index
+  *    (`ManifestScan`: partition-column derivation and pruning are
+  *    Spark's own, with zero listing). Data files are NEVER mutated
   *    or deleted by writers — a merge writes fresh files and commits a
   *    manifest that drops the replaced ones — so a reader holding
   *    version N is immune to any number of concurrent commits.
@@ -42,10 +43,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Writers stay serialized by [[WriterLease]] (single-writer discipline
   * unchanged — commits never race); this module adds the reader side.
-  * Tables written before this module existed have no manifest: [[read]]
-  * falls back to the plain directory scan, and the first manifest-aware
-  * write ADOPTS the current directory listing as the prior version's
-  * live set, upgrading the table in place.
+  * The log is the only truth: a TABLE is a path with a committed
+  * manifest version, and a data file no version lists does not exist —
+  * not for readers, not for writers building their next live set. So
+  * the orphans a writer leaves by crashing before its table's FIRST
+  * commit are invisible exactly like later ones. A directory of parquet
+  * files with no manifest is not a table: every read fails loudly and
+  * names the explicit adoption call,
+  * `Manifest.commit(spark, path, Manifest.listDataFiles(spark, path))`.
   */
 /** A concurrent commit changed the files this prepared commit was
   * computed against: its snapshot basis is gone (files it retires were
@@ -84,6 +89,20 @@ object Manifest {
 
   def currentVersion(spark: SparkSession, path: String): Option[Long] =
     versions(spark, path).lastOption
+
+  /** The current version of a TABLE — a path with a committed manifest
+    * version. Anything else fails loudly, naming the explicit adoption
+    * call for a directory of parquet files written without a manifest.
+    */
+  private[graft] def requireVersion(spark: SparkSession,
+      path: String): Long =
+    currentVersion(spark, path).getOrElse(
+      throw new IllegalStateException(
+        s"$path has no committed manifest version, so it is not a " +
+          "table: files no manifest lists do not exist. To adopt a " +
+          "directory of parquet files as-is, commit its listing once: " +
+          "Manifest.commit(spark, path, Manifest.listDataFiles(spark, " +
+          "path))"))
 
   /** Table-relative live-file list of version `v`. */
   /** Bounded memo of parsed `.list` contents (round 16): a committed
@@ -179,11 +198,13 @@ object Manifest {
   /** The per-file byte-length ledger of a version (round 16): `#flen
     * <relPath>=<bytes>` header lines, written at commit from the
     * previous version's ledger plus one `getFileStatus` per newly
-    * added file. A complete ledger lets every read resolve with ZERO
+    * added file. Every commit writes it COMPLETE (a commit that cannot
+    * stat an added file fails), so every read resolves with ZERO
     * filesystem listing ([[readFiles]]' manifest-served index) — the
     * O(files) metadata storm a million-file table cannot afford.
-    * Pre-round-16 manifests have no ledger (empty map) and read via
-    * the legacy listing path until their next commit back-fills it.
+    * Manifests written before the ledger existed fail their reads
+    * loudly; `commit(spark, path, currentLive(spark, path))` upgrades
+    * such a table once (it stats every file the ledger misses).
     */
   def fileLengthsAsOf(spark: SparkSession, path: String,
       v: Long): Map[String, Long] =
@@ -253,10 +274,9 @@ object Manifest {
       stats: FileStats.TableStats = Map.empty,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       txn: Option[(String, Long)] = None,
-      knownLens: Map[String, Long] = Map.empty,
       dvs: Map[String, DvPointer] = Map.empty): Long =
     withCommitLock(spark, path) {
-      commitLocked(spark, path, files, stats, schema, txn, knownLens, dvs)
+      commitLocked(spark, path, files, stats, schema, txn, dvs)
     }
 
   private def commitLocked(spark: SparkSession, path: String,
@@ -264,7 +284,6 @@ object Manifest {
       stats: FileStats.TableStats,
       schema: Option[org.apache.spark.sql.types.StructType],
       txn: Option[(String, Long)],
-      knownLens: Map[String, Long] = Map.empty,
       dvs: Map[String, DvPointer] = Map.empty): Long = {
     txn.foreach { case (app, _) =>
       require(app.nonEmpty && !app.exists(c => c == '\n' || c == '\r'),
@@ -274,6 +293,25 @@ object Manifest {
     val next = prev.getOrElse(0L) + 1
     val d = mdir(path)
     fs.mkdirs(d)
+    // byte-length ledger (round 16): carried forward for files already
+    // in the previous version (immutable data files — lengths can't go
+    // stale), one getFileStatus for each file the previous ledger
+    // misses. The ledger is always COMPLETE: a file the stat cannot see
+    // fails the commit before anything is written, because a gap
+    // would leave a version no manifest-served read can resolve
+    val prevLens = prev.map(v => fileLengthsAsOf(spark, path, v))
+      .getOrElse(Map.empty[String, Long])
+    val lenHeader = files.distinct.sorted.map { f =>
+      val len = prevLens.getOrElse(f,
+        try fs.getFileStatus(new Path(path, f)).getLen
+        catch {
+          case e: java.io.IOException =>
+            throw new java.io.IOException(
+              s"commit into $path cannot stat $f, so its #flen ledger " +
+                "entry cannot be written — nothing committed", e)
+        })
+      s"#flen $f=$len"
+    }
     val fileSet = files.toSet
     val carried = prev.map(v => FileStats.read(spark, path, v))
       .getOrElse(Map.empty)
@@ -293,25 +331,6 @@ object Manifest {
     val header = Seq(s"#ts ${System.currentTimeMillis()}") ++
       txns.toSeq.sortBy(_._1)
       .map { case (app, b) => s"#txn $app=$b" }
-    // byte-length ledger (round 16): carried forward for files already
-    // in the previous version (immutable data files — lengths can't go
-    // stale), one getFileStatus for each newly added file. A file the
-    // stat can't see yet (eventually-consistent listing after a PUT)
-    // simply has no ledger entry: reads of that version fall back to
-    // the listing path rather than fail, and the next commit re-stats.
-    // knownLens (round 17): lengths the caller already holds — e.g. the
-    // auto-backfill's single recursive listing — take precedence over
-    // per-file stats for files the previous ledger missed
-    val prevLens = prev.map(v => fileLengthsAsOf(spark, path, v))
-      .getOrElse(Map.empty[String, Long]) ++ knownLens
-    val lens = files.flatMap { f =>
-      prevLens.get(f).orElse {
-        try Some(fs.getFileStatus(new Path(path, f)).getLen)
-        catch { case _: java.io.IOException => None }
-      }.map(f -> _)
-    }.toMap
-    val lenHeader = lens.toSeq.sortBy(_._1)
-      .map { case (f, l) => s"#flen $f=$l" }
     // deletion-vector pointers (round 17): carry forward for files
     // still in the committed list (immutable files — a pointer only
     // changes when a merge-on-read delete re-points it), drop with the
@@ -724,8 +743,8 @@ object Manifest {
     * iff `p.txn` names a (appId, batchId) already at-or-behind the
     * table's committed marker — the exactly-once replay no-op,
     * re-checked under the lock so two concurrent replays of one epoch
-    * land once. Requires a manifest-managed table (adoption of a
-    * pre-manifest directory is a single-writer upgrade; use [[commit]]).
+    * land once. Requires a table ([[requireVersion]]); a table's first
+    * version comes from [[commit]] or [[appendStagedOptimistic]].
     * @throws CommitConflictException when the snapshot basis is gone
     */
   def commitOptimistic(spark: SparkSession, path: String,
@@ -733,9 +752,7 @@ object Manifest {
     require(p.retire.subsetOf(p.expected),
       s"commitOptimistic into $path: retire set must be within the " +
         s"expected scope (${(p.retire -- p.expected).take(3).mkString(", ")} is not)")
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"commitOptimistic needs a manifest-managed table: $path has none"))
+    val v = requireVersion(spark, path)
     val replayed = p.txn.exists { case (app, b) =>
       txnsAsOf(spark, path, v).get(app).exists(_ >= b)
     }
@@ -771,23 +788,24 @@ object Manifest {
     * The lock is held for O(batch files) renames plus one manifest
     * write — milliseconds at sane batch sizes. Returns None on a txn
     * replay (checked in-lock, staging left for the caller's cleanup).
+    * On a path with no version yet this is the table's FIRST commit:
+    * it lists exactly the batch, so orphans an earlier crashed first
+    * write left in the directory stay out of the table.
     */
   def appendStagedOptimistic(spark: SparkSession, path: String,
       stagingPath: String,
       txn: Option[(String, Long)] = None): Option[Long] =
     withCommitLock(spark, path) {
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"appendStagedOptimistic needs a manifest-managed table: " +
-            s"$path has none"))
+      val v = currentVersion(spark, path)
       val replayed = txn.exists { case (app, b) =>
-        txnsAsOf(spark, path, v).get(app).exists(_ >= b)
+        v.exists(txnsAsOf(spark, path, _).get(app).exists(_ >= b))
       }
       if (replayed) None
       else {
         val moved = stageIn(spark, path, stagingPath)
         Some(commitLocked(spark, path,
-          filesAsOf(spark, path, v) ++ moved, Map.empty, None, txn))
+          v.toSeq.flatMap(filesAsOf(spark, path, _)) ++ moved,
+          Map.empty, None, txn))
       }
     }
 
@@ -843,11 +861,11 @@ object Manifest {
     try out.write(st.json.getBytes("UTF-8")) finally out.close()
   }
 
-  /** The schema pinned at version `v`, if any. Versions before the first
-    * [[addColumn]] have no sidecar and read with footer-derived schemas
-    * (all their files agree — drift was rejected at write time), which
-    * also makes time travel to a pre-migration version return the
-    * pre-migration shape.
+  /** The schema pinned at version `v`, if any. Versions of a library-
+    * created table before its first migration have no sidecar and read
+    * with the first live file's footer schema (all their files agree —
+    * drift was rejected at write time), which also makes time travel to
+    * a pre-migration version return the pre-migration shape.
     */
   def schemaAsOf(spark: SparkSession, path: String,
       v: Long): Option[org.apache.spark.sql.types.StructType] = {
@@ -891,12 +909,8 @@ object Manifest {
           "every pre-migration row reads it as NULL")
       // evolve the PINNED sidecar, not the DataFrame's schema: the
       // rename-aware read projection strips field metadata, and pinning
-      // a stripped schema would silently erase live prior-name chains.
-      // (Pre-manifest tables keep the footer-derived adoption path.)
-      val cur = currentVersion(spark, path) match {
-        case Some(_) => evolvableSchema(spark, path)
-        case None => read(spark, path).schema
-      }
+      // a stripped schema would silently erase live prior-name chains
+      val cur = evolvableSchema(spark, path)
       require(!cur.fieldNames.map(_.toLowerCase)
         .contains(field.name.toLowerCase),
         s"addColumn: $path already has a column named ${field.name}")
@@ -908,14 +922,8 @@ object Manifest {
         s"addColumn: '${field.name}' was used by a dropped or renamed " +
           s"column of $path and may still hold stale values in live " +
           "files — choose a fresh name")
-      val evolved = org.apache.spark.sql.types.StructType(
-        cur.fields :+ field)
-      currentVersion(spark, path) match {
-        case Some(_) => commitSchemaOnly(spark, path, evolved)
-        case None => // pre-manifest adoption: single-writer upgrade
-          commit(spark, path, currentLive(spark, path),
-            schema = Some(evolved))
-      }
+      commitSchemaOnly(spark, path,
+        org.apache.spark.sql.types.StructType(cur.fields :+ field))
     }
 
   // ---- RENAME / DROP COLUMN (round 15) ------------------------------
@@ -1005,9 +1013,7 @@ object Manifest {
     */
   private def evolvableSchema(spark: SparkSession, path: String)
       : org.apache.spark.sql.types.StructType = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"schema migration needs a manifest-managed table: $path has none"))
+    val v = requireVersion(spark, path)
     schemaAsOf(spark, path, v).getOrElse(readAsOf(spark, path, v).schema)
   }
 
@@ -1149,33 +1155,6 @@ object Manifest {
       retire = Set.empty, add = Seq.empty,
       schema = Some(st))).get
 
-  /** One-time UPGRADE for an unpinned (library-created) table: pin the
-    * snapshot's CURRENTLY-INFERRED read schema as the sidecar, so
-    * every later read resolves through the zero-listing manifest-
-    * served index (round 16) instead of re-listing the files. The
-    * pinned shape is exactly what today's listing read infers —
-    * including the dir-derived partition column types — so results
-    * are unchanged; only the metadata cost drops. The metadata-only
-    * commit also back-fills the `#flen` ledger for every live file.
-    *
-    * Caveat (why this is OPT-IN, not automatic): pinning freezes the
-    * partition-column types inferred from the CURRENT directory
-    * values; a later append whose dir values no longer parse as that
-    * type (e.g. a date-shaped string column receiving 'unknown')
-    * would read those partition values as NULL under the pin, where
-    * the unpinned read would re-infer STRING. Tables with
-    * type-volatile partition values should stay unpinned.
-    */
-  def pinSchema(spark: SparkSession, path: String): Long =
-    WriterLease.withLease(spark, path) {
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"pinSchema needs a manifest-managed table: $path has none"))
-      require(schemaAsOf(spark, path, v).isEmpty,
-        s"$path already has a pinned schema (v$v)")
-      commitSchemaOnly(spark, path, read(spark, path).schema)
-    }
-
   /** Plan-time file skipping (round 11): resolve the current snapshot,
     * load its stats sidecar, and keep only files whose min/max envelopes
     * intersect every `(col, lo, hi)` range. Returns (kept, total) —
@@ -1186,12 +1165,8 @@ object Manifest {
     * never the query result.
     */
   def planSkipping(spark: SparkSession, path: String,
-      ranges: Seq[(String, Double, Double)]): (Seq[String], Int) = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"planSkipping needs a manifest-managed table: $path has none"))
-    planSkippingAsOf(spark, path, v, ranges)
-  }
+      ranges: Seq[(String, Double, Double)]): (Seq[String], Int) =
+    planSkippingAsOf(spark, path, requireVersion(spark, path), ranges)
 
   /** [[planSkipping]] pinned to a committed version — the time-travel
     * variant the SQL catalog uses, so a `VERSION AS OF` read prunes
@@ -1211,122 +1186,51 @@ object Manifest {
     */
   def readSkipping(spark: SparkSession, path: String,
       ranges: Seq[(String, Double, Double)]): DataFrame = {
-    val (kept, _) = planSkipping(spark, path, ranges)
+    val v = requireVersion(spark, path)
+    val (kept, _) = planSkippingAsOf(spark, path, v, ranges)
     if (kept.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        read(spark, path).schema)
-    else currentVersion(spark, path) match {
-      case Some(v) => readFiles(spark, path, schemaAsOf(spark, path, v),
-        kept, fileLengthsAsOf(spark, path, v),
-        commitTsAsOf(spark, path, v).getOrElse(0L),
-        dvsAsOf(spark, path, v))
-      case None => readFiles(spark, path, None, kept)
-    }
+        readAsOf(spark, path, v).schema)
+    else readSubsetAsOf(spark, path, v, kept)
   }
 
   /** Data files currently in the table directory (recursive, hidden
-    * paths excluded) — the adoption listing for pre-manifest tables and
-    * the before/after diff for appends. Table-relative.
+    * paths excluded), table-relative — vacuum's dead-file sweep, and
+    * the explicit adoption of a directory written without a manifest:
+    * `commit(spark, path, listDataFiles(spark, path))`.
     */
-  def listDataFiles(spark: SparkSession, path: String): Seq[String] =
-    listDataFilesWithLen(spark, path).map(_._1)
-
-  /** [[listDataFiles]] carrying each file's byte length off the SAME
-    * listing (a LIST already returns sizes) — the auto-backfill's
-    * one-walk source for the `#flen` ledger, paying zero extra stats.
-    */
-  def listDataFilesWithLen(spark: SparkSession,
-      path: String): Seq[(String, Long)] = {
+  def listDataFiles(spark: SparkSession, path: String): Seq[String] = {
     val fs = fsOf(spark, path)
     val root = new Path(path)
     if (!fs.exists(root)) return Seq.empty
     val rootUri = root.toUri.getPath.stripSuffix("/")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
       val n = st.getPath.getName
       if (!n.startsWith("_") && !n.startsWith(".")) {
         if (st.isDirectory) walk(st.getPath)
-        else buf += (st.getPath.toUri.getPath.stripPrefix(rootUri)
-          .stripPrefix("/") -> st.getLen)
+        else buf += st.getPath.toUri.getPath.stripPrefix(rootUri)
+          .stripPrefix("/")
       }
     }
     walk(root)
     buf.toSeq
   }
 
-  /** AUTO-BACKFILL of the `#flen` ledger at first read (round 17,
-    * retiring the pre-r16 fallback): a PINNED-schema snapshot whose
-    * ledger does not cover its files would read through the legacy
-    * listing path on EVERY query — so the first read does the one
-    * recursive listing it was going to do anyway, and commits the
-    * lengths back as a metadata-only version under the writer lease.
-    * Every later read is then zero-listing, with no manual
-    * [[pinSchema]]. Returns the version to serve (the backfilled one
-    * when the upgrade landed, else `v`).
-    *
-    * Deliberately scoped to PINNED tables: backfilling lengths changes
-    * no read semantics, only metadata cost. UNPINNED tables are left
-    * alone — serving them zero-listing would require auto-pinning the
-    * inferred schema, silently freezing partition-column types (the
-    * documented [[pinSchema]] caveat); that upgrade stays opt-in.
-    *
-    * Best-effort and once per (process, table, version): an active
-    * writer (ConcurrentWriterException) or a read-only store skips the
-    * upgrade — the reader keeps the legacy path, and any writer's next
-    * commit backfills the ledger anyway. Disable with
-    * `spark.graft.read.autoBackfillLens=false`.
-    */
-  def maybeBackfillLens(spark: SparkSession, path: String,
-      v: Long): Long = {
-    if (!spark.conf.get("spark.graft.read.autoBackfillLens", "true")
-        .toBoolean) return v
-    // a verb mid-mutation on this thread reads through here (reentrant
-    // lease); its own commit backfills — do not commit under its feet
-    if (WriterLease.heldByThisThread(path)) return v
-    if (!autoBackfillTried.add(s"$path@$v")) return v
-    val files = filesAsOf(spark, path, v)
-    val needs = schemaAsOf(spark, path, v).nonEmpty && files.nonEmpty &&
-      !files.forall(fileLengthsAsOf(spark, path, v).contains)
-    if (!needs) return v
-    try WriterLease.withLease(spark, path) {
-      // re-check under the lease — a racing writer may have committed
-      // past v (its commit carries a full ledger) or backfilled already
-      if (currentVersion(spark, path).contains(v)) {
-        val listed = listDataFilesWithLen(spark, path).toMap
-        commit(spark, path, files, knownLens = listed)
-      } else v
-    } catch {
-      case _: ConcurrentWriterException => v
-      case _: java.io.IOException => v
-    }
-  }
-
-  private val autoBackfillTried =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The live set the NEXT commit builds on: the current manifest if one
-    * exists, else (pre-manifest table) the plain directory listing,
-    * adopted as-is.
+  /** The live set the NEXT commit builds on: the current version's
+    * file list. `commit(spark, path, currentLive(spark, path))` is also
+    * the one-shot upgrade of a table whose manifests predate the `#flen`
+    * ledger: the commit stats every file the previous ledger misses.
     */
   def currentLive(spark: SparkSession, path: String): Seq[String] =
-    currentVersion(spark, path) match {
-      case Some(v) => filesAsOf(spark, path, v)
-      case None => listDataFiles(spark, path)
-    }
+    filesAsOf(spark, path, requireVersion(spark, path))
 
   /** Snapshot read: resolve the highest committed manifest, read exactly
-    * its files. `basePath` keeps partition-column derivation (and
-    * partition pruning over the explicit file index) identical to a
-    * directory read. No manifest → legacy directory scan.
+    * its files ([[readAsOf]]).
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    currentVersion(spark, path) match {
-      // current-snapshot reads route through the one-time ledger
-      // backfill (round 17); explicit AS-OF reads never upgrade
-      case Some(v) => readAsOf(spark, path, maybeBackfillLens(spark, path, v))
-      case None => spark.read.parquet(path)
-    }
+    readAsOf(spark, path, requireVersion(spark, path))
 
   /** One committed version's metadata — the unit of [[history]]. */
   final case class VersionInfo(version: Long, committedAtMillis: Long,
@@ -1401,20 +1305,9 @@ object Manifest {
       }
     require(files.nonEmpty,
       s"manifest v$v of $path lists no files — nothing to read")
-    readFiles(spark, path, schemaAsOf(spark, path, v), files,
-      fileLengthsAsOf(spark, path, v),
-      commitTsAsOf(spark, path, v).getOrElse(0L),
-      dvsAsOf(spark, path, v))
+    readSubsetAsOf(spark, path, v, files)
   }
 
-  /** The ONE schema-aware file reader every snapshot read funnels
-    * through: pinned schema applied when present, and — when the
-    * pinned schema carries [[PriorNamesKey]] rename chains — the read
-    * schema widened to the union of current + prior names (absent
-    * names resolve NULL per file) and each renamed column projected
-    * back as `coalesce(new, prior…)`. Sound because a live file holds
-    * at most ONE name of a chain (renames tombstone the vacated name).
-    */
   /** A column reference that treats `n` as a LITERAL identifier — a
     * pinned field name containing a dot (legal in parquet) must not
     * parse as nested access (ADVICE r15).
@@ -1422,41 +1315,53 @@ object Manifest {
   private def litCol(n: String): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.col("`" + n.replace("`", "``") + "`")
 
+  /** `files` paired with their `#flen` ledger lengths — what every
+    * manifest-served scan is built from. A file the ledger misses fails
+    * loudly: its manifests predate the ledger, and one
+    * `commit(spark, path, currentLive(spark, path))` upgrades the table.
+    */
+  private[graft] def sized(path: String, files: Seq[String],
+      lens: Map[String, Long]): Seq[(String, Long)] = {
+    val gaps = files.filterNot(lens.contains)
+    if (gaps.nonEmpty)
+      throw new IllegalStateException(
+        s"$path: the #flen ledger misses ${gaps.size} of the " +
+          s"${files.size} files read (e.g. ${gaps.head}) — its " +
+          "manifests predate the ledger. Upgrade the table once with " +
+          "Manifest.commit(spark, path, Manifest.currentLive(spark, " +
+          "path)), which stats every file the ledger misses")
+    files.map(f => f -> lens(f))
+  }
+
+  /** The ONE schema-aware file reader every snapshot read funnels
+    * through, always served from the manifest
+    * ([[org.apache.spark.sql.graftshim.ManifestScan]]): `lens` (the
+    * `#flen` ledger) sizes every file, so resolution lists nothing. The
+    * shape is the pinned schema when present, else the first file's
+    * footer with partition columns inferred from directory names. When
+    * the pinned schema carries [[PriorNamesKey]] rename chains, the read
+    * schema is widened to the union of current + prior names (absent
+    * names resolve NULL per file) and each renamed column projected
+    * back as `coalesce(new, prior…)`. Sound because a live file holds
+    * at most ONE name of a chain (renames tombstone the vacated name).
+    * A file missing from `lens` fails loudly ([[sized]]).
+    */
   private[graft] def readFiles(spark: SparkSession, path: String,
       pinned: Option[org.apache.spark.sql.types.StructType],
       relFiles: Seq[String],
-      lens: Map[String, Long] = Map.empty,
+      lens: Map[String, Long],
       commitMtime: Long = 0L,
       dvs: Map[String, DvPointer] = Map.empty,
       keepPositions: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.coalesce
-    val r = spark.read.option("basePath", path)
-    // ZERO-LISTING fast path (round 16): when the manifest's `#flen`
-    // ledger covers every requested file and the schema is pinned, the
-    // read is served by a manifest-backed FileIndex — no per-file
-    // listing job, no getFileStatus storm; resolution is O(manifest
-    // GET). Partition-value parsing and pruning are Spark's own
-    // (ManifestScan scaladoc). Ledger-incomplete (pre-round-16) or
-    // unpinned snapshots keep the legacy listing read.
-    def served(st: org.apache.spark.sql.types.StructType,
-        files: Seq[String]): Option[DataFrame] =
-      if (files.nonEmpty && files.forall(lens.contains))
-        Some(org.apache.spark.sql.graftshim.ManifestScan.dataFrame(
-          spark, path, files.map(f => f -> lens(f)), st, commitMtime))
-      else None
     // the raw scan of a file SUBSET (deletion vectors split the read:
     // clean files keep the exact pre-DV plan, DV'd files anti-join
     // their recorded positions pre-projection — DeletionVectors
     // scaladoc). dvs empty ⇒ one raw(relFiles) call, the old plan.
     def raw(st: Option[org.apache.spark.sql.types.StructType])(
-        files: Seq[String]): DataFrame = {
-      val paths = files.map(f => s"$path/$f")
-      st match {
-        case Some(s) =>
-          served(s, files).getOrElse(r.schema(s).parquet(paths: _*))
-        case None => r.parquet(paths: _*)
-      }
-    }
+        files: Seq[String]): DataFrame =
+      org.apache.spark.sql.graftshim.ManifestScan.dataFrame(
+        spark, path, sized(path, files, lens), st, commitMtime)
     def scan(st: Option[org.apache.spark.sql.types.StructType]): DataFrame =
       DeletionVectors.applyTo(spark, path, relFiles, dvs, raw(st),
         keepPositions)
@@ -1509,11 +1414,11 @@ object Manifest {
     * in every rewrite's re-read.
     */
   def readSubsetAsOf(spark: SparkSession, path: String, v: Long,
-      relFiles: Seq[String]): DataFrame =
+      relFiles: Seq[String], keepPositions: Boolean = false): DataFrame =
     readFiles(spark, path, schemaAsOf(spark, path, v), relFiles,
       fileLengthsAsOf(spark, path, v),
       commitTsAsOf(spark, path, v).getOrElse(0L),
-      dvsAsOf(spark, path, v))
+      dvsAsOf(spark, path, v), keepPositions)
 
   /** Snapshot read carrying the two reserved POSITION columns
     * ([[DeletionVectors.FilePathCol]] = data-file qualified URI,
@@ -1527,10 +1432,7 @@ object Manifest {
     val files = filesAsOf(spark, path, v)
     require(files.nonEmpty,
       s"manifest v$v of $path lists no files — nothing to read")
-    readFiles(spark, path, schemaAsOf(spark, path, v), files,
-      fileLengthsAsOf(spark, path, v),
-      commitTsAsOf(spark, path, v).getOrElse(0L),
-      dvsAsOf(spark, path, v), keepPositions = true)
+    readSubsetAsOf(spark, path, v, files, keepPositions = true)
   }
 
   /** Move every data file under `stagingPath` into the table directory,
@@ -1601,10 +1503,11 @@ object Manifest {
     * the current snapshot's files) — the manifest-aware replacement for
     * listing partition dirs off the filesystem, where orphans from a
     * crashed (uncommitted) writer would masquerade as live partitions.
+    * A path with no committed version has none, whatever files it holds.
     */
   def livePartitions(spark: SparkSession, path: String): Seq[String] =
-    currentLive(spark, path).map(_.takeWhile(_ != '/'))
-      .filter(_.contains("=")).distinct
+    currentVersion(spark, path).toSeq.flatMap(filesAsOf(spark, path, _))
+      .map(_.takeWhile(_ != '/')).filter(_.contains("=")).distinct
 
   // ---- reader retention (round 14) ----
 

@@ -130,9 +130,13 @@ object MaterializedViews {
         .toUri.getPath.stripSuffix("/")
       val prefix = srcPath + "/"
       val touchesSource = plan.exists {
+        // a manifest-served scan's root IS the table path; a listing
+        // read's roots are the files under it
         case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
-          h.location.rootPaths.exists(
-            _.toUri.getPath.startsWith(prefix))
+          h.location.rootPaths.exists { r =>
+            val p = r.toUri.getPath.stripSuffix("/")
+            p == srcPath || p.startsWith(prefix)
+          }
         case dsv2: org.apache.spark.sql.execution.datasources.v2
             .DataSourceV2Relation => dsv2.table match {
           // V2 catalog scans of the source count too (round 18: the

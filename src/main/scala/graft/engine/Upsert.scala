@@ -256,11 +256,9 @@ object Upsert {
             appendIntoEmptyChecked(spark, path, incoming, None)
           nIncoming
         } else {
-        val version = Manifest.currentVersion(spark, path)
-        val table = version.fold(Manifest.read(spark, path))(
-          Manifest.readAsOf(spark, path, _))
-        val preLive = version.fold(Manifest.listDataFiles(spark, path))(
-          Manifest.filesAsOf(spark, path, _))
+        val version = Manifest.requireVersion(spark, path)
+        val table = Manifest.readAsOf(spark, path, version)
+        val preLive = Manifest.filesAsOf(spark, path, version)
         val kept = newRows(table, incoming, keys)
         val merged =
           kept.unionByName(incoming.select(table.columns.map(col): _*))
@@ -271,18 +269,14 @@ object Upsert {
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         try {
           val movedIn = Manifest.stageIn(spark, path, stagingPath)
-          version match {
-            case None => Manifest.commit(spark, path, movedIn)
-            case Some(_) =>
-              // whole-table scope: even a blind append into ANY file
-              // set conflicts (its rows could share keys with
-              // `incoming`, and silently keeping both would break the
-              // table's unique-key contract) — the merge recomputes
-              // over the post-append snapshot instead
-              Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
-                scope = _ => true, expected = preLive.toSet,
-                retire = preLive.toSet, add = movedIn))
-          }
+          // whole-table scope: even a blind append into ANY file set
+          // conflicts (its rows could share keys with `incoming`, and
+          // silently keeping both would break the table's unique-key
+          // contract) — the merge recomputes over the post-append
+          // snapshot instead
+          Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
+            scope = _ => true, expected = preLive.toSet,
+            retire = preLive.toSet, add = movedIn))
           nIncoming
         } finally {
           fs.delete(new org.apache.hadoop.fs.Path(stagingPath), true); ()
@@ -350,13 +344,11 @@ object Upsert {
     */
   private def mergeOnce(spark: SparkSession, path: String,
       incoming: DataFrame, keys: Seq[String], dateCol: String): Unit = {
-    val version = Manifest.currentVersion(spark, path)
+    val version = Manifest.requireVersion(spark, path)
     // pin table rows and file list to the SAME snapshot — resolving
     // them independently could straddle a concurrent append's commit
-    val table = version.fold(Manifest.read(spark, path))(
-      Manifest.readAsOf(spark, path, _))
-    val preLive = version.fold(Manifest.listDataFiles(spark, path))(
-      Manifest.filesAsOf(spark, path, _))
+    val table = Manifest.readAsOf(spark, path, version)
+    val preLive = Manifest.filesAsOf(spark, path, version)
     // null-safe date match: a NULL-date incoming row must pull the
     // existing NULL partition into `kept`, or its surviving rows
     // would be dropped by the __HIVE_DEFAULT_PARTITION__ replacement
@@ -375,15 +367,9 @@ object Upsert {
         moveStagedPartitions(fs, path, stagingPath, Seq(dateCol))
       val replacedParts = stagedParts.map(_ + "/")
       val scope = (f: String) => replacedParts.exists(f.startsWith)
-      version match {
-        case None => // pre-manifest adoption commit (single-writer)
-          Manifest.commit(spark, path,
-            preLive.filterNot(scope) ++ movedIn)
-        case Some(_) =>
-          Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
-            scope = scope, expected = preLive.filter(scope).toSet,
-            retire = preLive.filter(scope).toSet, add = movedIn))
-      }
+      Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
+        scope = scope, expected = preLive.filter(scope).toSet,
+        retire = preLive.filter(scope).toSet, add = movedIn))
       ()
     } finally {
       fs.delete(new org.apache.hadoop.fs.Path(stagingPath), true); ()
@@ -512,9 +498,7 @@ object Upsert {
   private def overwriteOnce(spark: SparkSession, path: String,
       incoming: DataFrame, partCols: Seq[String],
       expectedValues: Option[Seq[String]]): Long = {
-        val version = Manifest.currentVersion(spark, path)
-        val preLive = version.fold(Manifest.listDataFiles(spark, path))(
-          Manifest.filesAsOf(spark, path, _))
+        val preLive = Manifest.currentLive(spark, path)
         val stagingPath = s"$path.__overwrite_staging_" +
           java.util.UUID.randomUUID().toString.take(8)
         incoming.write.mode("overwrite").partitionBy(partCols: _*)
@@ -554,15 +538,9 @@ object Upsert {
           }
           val replacedPrefixes = replaced.map(_ + "/")
           val scope = (f: String) => replacedPrefixes.exists(f.startsWith)
-          version match {
-            case None => // pre-manifest adoption commit (single-writer)
-              Manifest.commit(spark, path,
-                preLive.filterNot(scope) ++ movedIn)
-            case Some(_) =>
-              Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
-                scope = scope, expected = preLive.filter(scope).toSet,
-                retire = preLive.filter(scope).toSet, add = movedIn))
-          }
+          Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
+            scope = scope, expected = preLive.filter(scope).toSet,
+            retire = preLive.filter(scope).toSet, add = movedIn))
           n
         } finally {
           fs.delete(new org.apache.hadoop.fs.Path(stagingPath), true); ()
@@ -707,11 +685,7 @@ object Upsert {
       set: Option[Map[String, org.apache.spark.sql.Column]]): Long =
     WriterLease.withLease(spark, path) {
       val predicate = prepared.predicate
-      val cur = Manifest.currentVersion(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"merge-on-read DML needs a manifest-managed table: $path " +
-            "has no committed version — commit an adoption snapshot " +
-            "first, or use copy-on-write"))
+      val cur = Manifest.requireVersion(spark, path)
       val live = Manifest.filesAsOf(spark, path, cur)
       if (live.isEmpty) 0L
       else {
@@ -869,7 +843,9 @@ object Upsert {
       predicate: org.apache.spark.sql.Column, incoming: DataFrame,
       partCols: Seq[String]): Long =
     WriterLease.withLease(spark, path) {
-      val table = Manifest.read(spark, path)
+      // pin rows, file list and touched-file re-read to ONE snapshot
+      val cur = Manifest.requireVersion(spark, path)
+      val table = Manifest.readAsOf(spark, path, cur)
       requireSameColumns(incoming, table, path)
       // leak check FIRST — nothing staged, nothing moved on refusal
       val leaks = incoming.filter(org.apache.spark.sql.functions
@@ -881,7 +857,7 @@ object Upsert {
           "replaced region and duplicate on the next replace; widen " +
           "the predicate or append them separately")
       val toRel = scannedFileToRel(path, "replaceWhere") _
-      val touched = dvDiscovery(spark, path) match {
+      val touched = dvDiscovery(spark, path, cur) match {
         case Some((scan0, toRelB)) =>
           scan0.filter(predicate)
             .select(col(DeletionVectors.FilePathCol))
@@ -891,24 +867,17 @@ object Upsert {
             .select(org.apache.spark.sql.functions.input_file_name())
             .distinct().collect().map(r => toRel(r.getString(0))).sorted
       }
-      val live = Manifest.currentLive(spark, path)
+      val live = Manifest.filesAsOf(spark, path, cur)
       val touchedSet = touched.toSet
       require(touchedSet.subsetOf(live.toSet),
         s"replaceWhere into $path: scan saw files outside the live " +
           s"snapshot: ${(touchedSet -- live.toSet).mkString(", ")}")
-      val cur = Manifest.currentVersion(spark, path)
-      val pinned = cur.flatMap(Manifest.schemaAsOf(spark, path, _))
       val cols = table.columns.toIndexedSeq
       val incomingAligned = incoming.select(cols.map(col): _*)
       val (deleted, staged) =
         if (touched.isEmpty) (0L, incomingAligned)
         else {
-          val sub = Manifest.readFiles(spark, path, pinned,
-            touched.toSeq,
-            cur.map(Manifest.fileLengthsAsOf(spark, path, _))
-              .getOrElse(Map.empty),
-            dvs = cur.map(Manifest.dvsAsOf(spark, path, _))
-              .getOrElse(Map.empty))
+          val sub = Manifest.readSubsetAsOf(spark, path, cur, touched.toSeq)
           // keep FALSE-or-NULL rows (SQL DELETE three-valued semantics,
           // same as deleteWhere)
           val kept = sub.filter(org.apache.spark.sql.functions
@@ -918,16 +887,12 @@ object Upsert {
             kept.select(cols.map(col): _*).unionByName(incomingAligned))
         }
       withStaged(spark, path, staged, partCols, "replace") { movedIn =>
-        if (cur.isEmpty)
-          Manifest.commit(spark, path,
-            live.filterNot(touchedSet) ++ movedIn)
-        else
-          // scope = the files this replace retires; concurrent blind
-          // appends outside the region are preserved (WriteSerializable,
-          // same contract as deleteWhere)
-          Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
-            scope = touchedSet, expected = touchedSet,
-            retire = touchedSet, add = movedIn))
+        // scope = the files this replace retires; concurrent blind
+        // appends outside the region are preserved (WriteSerializable,
+        // same contract as deleteWhere)
+        Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
+          scope = touchedSet, expected = touchedSet,
+          retire = touchedSet, add = movedIn))
         deleted
       }
     }
@@ -966,15 +931,11 @@ object Upsert {
     * DV-free snapshot: callers keep the single-source
     * `input_file_name()` scan with its full predicate pushdown.
     */
-  private def dvDiscovery(spark: SparkSession, path: String)
-      : Option[(DataFrame, String => String)] = {
-    val cur = Manifest.currentVersion(spark, path)
-    val dvs = cur.map(Manifest.dvsAsOf(spark, path, _))
-      .getOrElse(Map.empty[String, Manifest.DvPointer])
-    if (dvs.isEmpty) None
-    else Some((Manifest.readWithPositionsAsOf(spark, path, cur.get),
+  private def dvDiscovery(spark: SparkSession, path: String, v: Long)
+      : Option[(DataFrame, String => String)] =
+    if (Manifest.dvsAsOf(spark, path, v).isEmpty) None
+    else Some((Manifest.readWithPositionsAsOf(spark, path, v),
       scannedFileToRel(path, "DV discovery") _))
-  }
 
   /** Shared DELETE/UPDATE engine: find touched files via a
     * predicate-pushed `input_file_name()` scan, rewrite only those,
@@ -986,7 +947,9 @@ object Upsert {
       set: Option[Map[String, org.apache.spark.sql.Column]]): Long =
     WriterLease.withLease(spark, path) {
       val predicate = prepared.predicate
-      val table = Manifest.read(spark, path)
+      // pin rows, file list and touched-file re-read to ONE snapshot
+      val cur = Manifest.requireVersion(spark, path)
+      val table = Manifest.readAsOf(spark, path, cur)
       val toRel = scannedFileToRel(path, "deleteWhere") _
       // Touched-file discovery. Plain predicates keep the direct
       // predicate-pushed scan (filters reach parquet). With membership
@@ -997,7 +960,7 @@ object Upsert {
       // honest cost of a key set too large to literalize (AQE still
       // broadcasts a small-enough key side).
       val fileCol = "__graft_input_file"
-      val touched = dvDiscovery(spark, path) match {
+      val touched = dvDiscovery(spark, path, cur) match {
         case Some((scan0, toRelB)) =>
           // DV'd snapshot: positions captured per scan branch replace
           // input_file_name (which cannot bind over the DV union)
@@ -1021,7 +984,7 @@ object Upsert {
       }
       if (touched.isEmpty) 0L
       else {
-        val live = Manifest.currentLive(spark, path)
+        val live = Manifest.filesAsOf(spark, path, cur)
         val touchedSet = touched.toSet
         require(touchedSet.subsetOf(live.toSet),
           s"deleteWhere into $path: scan saw files outside the live " +
@@ -1034,13 +997,7 @@ object Upsert {
         // drop the added column's values from newer files. readFiles is
         // also RENAME-aware (prior-name coalesce), so a rewrite after a
         // renameColumn re-lands old rows under the new name.
-        val cur = Manifest.currentVersion(spark, path)
-        val pinned = cur.flatMap(Manifest.schemaAsOf(spark, path, _))
-        val sub = Manifest.readFiles(spark, path, pinned, touched.toSeq,
-          cur.map(Manifest.fileLengthsAsOf(spark, path, _))
-            .getOrElse(Map.empty),
-          dvs = cur.map(Manifest.dvsAsOf(spark, path, _))
-            .getOrElse(Map.empty))
+        val sub = Manifest.readSubsetAsOf(spark, path, cur, touched.toSeq)
         val partCols =
           Manifest.layoutPartitionCols(touched.toSeq).getOrElse(Seq.empty)
         // membership joins attach to the touched-files read too; the
@@ -1073,19 +1030,14 @@ object Upsert {
             }: _*)
         }
         withStaged(spark, path, kept, partCols, "rewrite") { movedIn =>
-          if (Manifest.currentVersion(spark, path).isEmpty)
-            // pre-manifest directory: adoption commit (single-writer)
-            Manifest.commit(spark, path, live.filterNot(touchedSet) ++ movedIn)
-          else
-            // optimistic commit: scope = exactly the files this rewrite
-            // retires. The live set is re-resolved AT COMMIT, so a
-            // concurrent blind append's files are preserved (its rows
-            // are not re-matched against the predicate —
-            // WriteSerializable, serializing this delete BEFORE the
-            // append)
-            Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
-              scope = touchedSet, expected = touchedSet,
-              retire = touchedSet, add = movedIn))
+          // optimistic commit: scope = exactly the files this rewrite
+          // retires. The live set is re-resolved AT COMMIT, so a
+          // concurrent blind append's files are preserved (its rows are
+          // not re-matched against the predicate — WriteSerializable,
+          // serializing this delete BEFORE the append)
+          Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
+            scope = touchedSet, expected = touchedSet,
+            retire = touchedSet, add = movedIn))
           matched
         }
       }
@@ -1186,24 +1138,13 @@ object Upsert {
           // stage-in under job-unique names, then ONE snapshot commit
           // of exactly this batch's files — a concurrent reader sees
           // the whole batch or none of it, orphans from crashed writers
-          // are never resurrected, and a concurrent appender's files
-          // (preserved via the commit-time live resolution) are never
-          // dropped
-          Manifest.currentVersion(spark, path) match {
-            case Some(_) =>
-              // stage-in happens INSIDE the commit lock — see
-              // Manifest.appendStagedOptimistic (vacuum-vs-append race)
-              Manifest.appendStagedOptimistic(spark, path, stagingPath,
-                txn).isDefined
-            case None =>
-              // adoption of a pre-manifest directory: the first
-              // manifest-aware write upgrades the table in place —
-              // single-writer by construction, like every adoption
-              val preLive = Manifest.listDataFiles(spark, path)
-              val moved = Manifest.stageIn(spark, path, stagingPath)
-              Manifest.commit(spark, path, preLive ++ moved, txn = txn)
-              true
-          }
+          // are never resurrected (not even by a table's first commit),
+          // and a concurrent appender's files (preserved via the
+          // commit-time live resolution) are never dropped. Stage-in
+          // happens INSIDE the commit lock — see
+          // Manifest.appendStagedOptimistic (vacuum-vs-append race)
+          Manifest.appendStagedOptimistic(spark, path, stagingPath,
+            txn).isDefined
         } else {
           // an EMPTY epoch still records its marker (metadata-only
           // commit) so a replay is detected — but only once the table
@@ -1220,11 +1161,12 @@ object Upsert {
     }
   }
 
-  private def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
-  }
+  /** A table is a path with a committed manifest version; files in a
+    * directory no version lists (a crashed first write's orphans) do
+    * not make one.
+    */
+  private def tableExists(spark: SparkSession, path: String): Boolean =
+    Manifest.currentVersion(spark, path).isDefined
 
   /** Whole-table OVERWRITE — SQL `INSERT OVERWRITE TABLE t SELECT …`
     * (static mode, no partition spec; Postgres-side the reference would
@@ -1250,9 +1192,7 @@ object Upsert {
       else {
         checkedSnapshot(spark, path, incoming) // drift check; shell flows
         retryingConflicts(s"overwriteTable into $path") {
-          val version = Manifest.currentVersion(spark, path)
-          val preLive = version.fold(Manifest.listDataFiles(spark, path))(
-            Manifest.filesAsOf(spark, path, _))
+          val preLive = Manifest.currentLive(spark, path)
           // the shared staged-write lifecycle (review fix, round 15 —
           // this was the last hand-rolled copy); rows counted from the
           // moved files (footer metadata, not a data scan)
@@ -1262,14 +1202,9 @@ object Upsert {
               if (moved.isEmpty) 0L
               else spark.read.option("basePath", path)
                 .parquet(moved.map(f => s"$path/$f"): _*).count()
-            version match {
-              case None => Manifest.commit(spark, path, moved)
-              case Some(_) =>
-                Manifest.commitOptimistic(spark, path,
-                  Manifest.PreparedCommit(
-                    scope = _ => true, expected = preLive.toSet,
-                    retire = preLive.toSet, add = moved))
-            }
+            Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
+              scope = _ => true, expected = preLive.toSet,
+              retire = preLive.toSet, add = moved))
             n
           }
         }
@@ -1420,8 +1355,7 @@ object Upsert {
         // plan. Matched-free programs (insert-only) have nothing to
         // DV.
         val mor = matched.nonEmpty && bySource.isEmpty &&
-          dmlMode(spark, path) == "merge-on-read" &&
-          Manifest.currentVersion(spark, path).nonEmpty
+          dmlMode(spark, path) == "merge-on-read"
         if (mor)
           mergeActionsOnceMor(spark, path, source, keys, matched,
             insert, partitionCols)
@@ -1451,9 +1385,7 @@ object Upsert {
       insert: Option[InsertSpec], partitionCols: Seq[String])
       : (Long, Long) = {
     import org.apache.spark.sql.functions.{lit, when}
-    val version = Manifest.currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"mergeActionsOnceMor needs a manifest-managed table: $path"))
+    val version = Manifest.requireVersion(spark, path)
     val preLive = Manifest.filesAsOf(spark, path, version)
     if (preLive.isEmpty)
       return mergeIntoEmptyShell(spark, path, version, source, keys,
@@ -1558,9 +1490,7 @@ object Upsert {
       bySource: Seq[BySourceAction], insert: Option[InsertSpec],
       partitionCols: Seq[String]): (Long, Long) = {
     import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, when}
-    val version = Manifest.currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"mergeActions needs a manifest-managed table: $path has none"))
+    val version = Manifest.requireVersion(spark, path)
     val preLive = Manifest.filesAsOf(spark, path, version)
     if (preLive.isEmpty)
       // a freshly CREATE TABLE'd shell or a fully-deleted table: a
@@ -1597,7 +1527,7 @@ object Upsert {
         // standard cost of this clause; see [[mergeProgram]])
         preLive.sorted
       else if (matched.isEmpty) Seq.empty // insert-only: no rewrite needed
-      else dvDiscovery(spark, path) match {
+      else dvDiscovery(spark, path, version) match {
         case Some((scan0, toRelB)) =>
           // DV'd snapshot: per-branch position capture instead of
           // input_file_name (which cannot bind over the DV union)

@@ -68,13 +68,6 @@ object WriterLease {
     * Reentrant within a thread (the inner call is a no-op pass-through).
     * @throws ConcurrentWriterException when another writer holds it
     */
-  /** Does THIS thread already hold `tablePath`'s lease? Lets read-path
-    * maintenance (the `#flen` auto-backfill) stay out of the way of the
-    * verb that is mid-mutation — its own commit will carry the ledger.
-    */
-  def heldByThisThread(tablePath: String): Boolean =
-    held.get().contains(tablePath)
-
   def withLease[A](spark: SparkSession, tablePath: String)(body: => A): A =
     if (held.get().contains(tablePath)) body
     else {

@@ -78,11 +78,7 @@ case class ApplyDeletionVectors(spark: SparkSession)
 
   private def expand(r: DataSourceV2Relation): LogicalPlan = {
     val t = r.table.asInstanceOf[GraftTable]
-    val v = t.servedVersion.getOrElse(
-      throw new IllegalStateException(
-        s"deletion-vector read of ${t.name()}: DV pointers without a " +
-          "served manifest version"))
-    val applied = Manifest.readAsOf(spark, t.path, v)
+    val applied = Manifest.readAsOf(spark, t.path, t.servedVersion)
       .queryExecution.analyzed
     val byName = applied.output.map(a => a.name -> a).toMap
     val projection: Seq[NamedExpression] = r.output.map { a =>

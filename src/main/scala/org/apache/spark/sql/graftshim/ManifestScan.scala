@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, LogicalRelation, NoopCache, PartitioningAwareFileIndex, PartitionSpec, PartitioningUtils}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -31,6 +31,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * PlanSpec's numFiles assertions see the stock machinery over the
   * fabricated statuses.
   *
+  * A snapshot's schema is its pinned sidecar when a `CREATE TABLE` or
+  * a migration pinned one; otherwise it is the first served file's
+  * parquet footer, read on the driver ([[footerSchema]]) — what the
+  * listing read's schema inference would sample, without its Spark job.
+  *
   * Lives in the `org.apache.spark.sql` subpackage because
   * `HadoopFsRelation`, `LogicalRelation`, `ParquetScanBuilder` and the
   * file-index internals are `private[sql]` — the standard
@@ -42,7 +47,8 @@ object ManifestScan {
     * from manifest `(relativePath, length)` entries — no filesystem
     * access, ever. `pinned` feeds partition-column TYPES (the same
     * userSpecifiedSchema override a listing-based read applies);
-    * inference handles dir columns outside it (`ptx_*` transforms).
+    * inference handles dir columns outside it (`ptx_*` transforms, and
+    * every dir column of an unpinned snapshot).
     */
   final class ManifestFileIndex(
       spark: SparkSession,
@@ -101,31 +107,54 @@ object ManifestScan {
       mtimeMillis)
   }
 
-  /** `dataSchema` = pinned minus the dir-derived partition columns
-    * (they live in directory names, not in the files), mirroring
-    * DSv2 `FileTable.dataSchema`'s user-schema branch.
+  /** The data schema of an unpinned snapshot: the first served file's
+    * parquet footer, read on the driver with the session's parquet type
+    * mapping — the file Spark's own inference samples (`mergeSchema`
+    * off), minus the footer-reading Spark job. Nullable, like every
+    * inferred file-source schema.
     */
-  private def split(pinned: StructType,
-      partitionSchema: StructType): (StructType, StructType) = {
+  private def footerSchema(spark: SparkSession,
+      idx: ManifestFileIndex): StructType = {
+    val st = idx.leafFiles.head._2
+    val meta = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
+        classic(spark).sessionState.newHadoopConf()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter
+        .NO_FILTER)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(st.getPath, meta),
+      new ParquetToSparkSchemaConverter(classic(spark).sessionState.conf))
+      .asNullable
+  }
+
+  /** (data schema, partition schema) of a served snapshot: the pinned
+    * schema (else the footer's) minus the dir-derived partition columns
+    * (they live in directory names, not in the files), mirroring DSv2
+    * `FileTable.dataSchema`'s user-schema branch.
+    */
+  private def split(spark: SparkSession, idx: ManifestFileIndex,
+      pinned: Option[StructType]): (StructType, StructType) = {
+    val partitionSchema = idx.partitionSchema
     val partNames = partitionSchema.fieldNames
       .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    val data = StructType(pinned.fields.filterNot(f =>
-      partNames(f.name.toLowerCase(java.util.Locale.ROOT))))
+    val data = StructType(pinned.getOrElse(footerSchema(spark, idx))
+      .fields.filterNot(f =>
+        partNames(f.name.toLowerCase(java.util.Locale.ROOT))))
     (data, partitionSchema)
   }
 
   /** V1 read: `LogicalRelation(HadoopFsRelation(manifest-served index))`
     * — the listing-free twin of `spark.read.schema(pinned)
-    * .parquet(paths…)`. Output columns: pinned's data columns followed
-    * by every partition directory column (pinned types win where names
-    * overlap) — callers project/drop exactly as they do on the legacy
+    * .parquet(paths…)`. Output columns: the data columns followed by
+    * every partition directory column (pinned types win where names
+    * overlap) — callers project/drop exactly as they do on a directory
     * read.
     */
   def dataFrame(spark: SparkSession, tablePath: String,
-      files: Seq[(String, Long)], pinned: StructType,
+      files: Seq[(String, Long)], pinned: Option[StructType],
       mtimeMillis: Long): DataFrame = {
-    val idx = index(spark, tablePath, files, Some(pinned), mtimeMillis)
-    val (dataSchema, partitionSchema) = split(pinned, idx.partitionSchema)
+    val idx = index(spark, tablePath, files, pinned, mtimeMillis)
+    val (dataSchema, partitionSchema) = split(spark, idx, pinned)
     val relation = HadoopFsRelation(idx, partitionSchema, dataSchema,
       None, new ParquetFileFormat, Map.empty[String, String])(
       classic(spark))
@@ -139,11 +168,11 @@ object ManifestScan {
     * `FileTable.schema` (data columns, then partition-only columns).
     */
   def parquetScanBuilder(spark: SparkSession, tablePath: String,
-      files: Seq[(String, Long)], pinned: StructType,
+      files: Seq[(String, Long)], pinned: Option[StructType],
       options: CaseInsensitiveStringMap,
       mtimeMillis: Long): (StructType, ScanBuilder) = {
-    val idx = index(spark, tablePath, files, Some(pinned), mtimeMillis)
-    val (dataSchema, partitionSchema) = split(pinned, idx.partitionSchema)
+    val idx = index(spark, tablePath, files, pinned, mtimeMillis)
+    val (dataSchema, partitionSchema) = split(spark, idx, pinned)
     val caseSensitive = classic(spark).sessionState.conf.caseSensitiveAnalysis
     val (fullSchema, _) = PartitioningUtils.mergeDataAndPartitionSchema(
       dataSchema, partitionSchema, caseSensitive)
@@ -157,10 +186,10 @@ object ManifestScan {
     * computes, from the manifest instead of a listing.
     */
   def tableSchema(spark: SparkSession, tablePath: String,
-      files: Seq[(String, Long)], pinned: StructType): StructType = {
+      files: Seq[(String, Long)], pinned: Option[StructType]): StructType = {
     // schema derivation never reads mtimes
-    val idx = index(spark, tablePath, files, Some(pinned), 0L)
-    val (dataSchema, partitionSchema) = split(pinned, idx.partitionSchema)
+    val idx = index(spark, tablePath, files, pinned, 0L)
+    val (dataSchema, partitionSchema) = split(spark, idx, pinned)
     val caseSensitive = classic(spark).sessionState.conf.caseSensitiveAnalysis
     PartitioningUtils.mergeDataAndPartitionSchema(
       dataSchema, partitionSchema, caseSensitive)._1

@@ -103,6 +103,8 @@ class FileStatsSpec extends AnyFunSuite {
     val path = tmp()
     (0 until 512).map(i => (i.toLong, s"p$i")).toDF("k", "v")
       .repartitionByRange(8, col("k")).write.parquet(path)
+    // a plain parquet write is no table until its listing is committed
+    Manifest.commit(spark, path, Manifest.listDataFiles(spark, path))
     Compaction.compact(spark, path, targetBytesPerFile = 4L * 1024,
       statsCols = Seq("k"), clusterBy = Seq("k"))
     val (kept, total) =

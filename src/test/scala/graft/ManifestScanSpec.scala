@@ -7,12 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{Manifest, Upsert}
 
-/** The zero-listing read path (round 16): snapshot reads must resolve
-  * through the manifest-served file index — not Spark's listing-based
-  * `InMemoryFileIndex` — whenever the `#flen` ledger covers the
-  * snapshot and a schema is pinned; ledger-less (pre-round-16)
-  * manifests must fall back to the legacy listing read and still
-  * answer identically. The index-class assertions here are the
+/** The zero-listing read path: every snapshot read — pinned or not,
+  * library or SQL — must resolve through the manifest-served file index,
+  * never Spark's listing-based `InMemoryFileIndex`; a version whose
+  * `#flen` ledger is incomplete must fail loudly and name the one-shot
+  * upgrade commit. The index-class assertions here are the
   * regression guard: a refactor that silently reverts to listing
   * would pass every value check while reintroducing the O(files)
   * metadata storm at scale.
@@ -81,14 +80,10 @@ class ManifestScanSpec extends AnyFunSuite {
       Seq(10L, 20L))
   }
 
-  test("a ledger-less (pre-round-16) manifest falls back to the legacy " +
-      "listing read and answers identically; the next commit back-fills") {
-    root
-    spark.sql("CREATE TABLE mscat.ns.zl3 (k BIGINT, cents BIGINT)")
-    spark.sql("INSERT INTO mscat.ns.zl3 VALUES (1, 10), (2, 20)")
-    val path = s"$root/ns/zl3"
-    // strip the #flen header lines in place — the on-disk shape every
-    // pre-round-16 manifest has
+  /** Strip the `#flen` header lines of every committed manifest in
+    * place — the on-disk shape of a table written before the ledger.
+    */
+  private def stripLedger(path: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mdir = new org.apache.hadoop.fs.Path(s"$path/_graft_manifest")
@@ -103,110 +98,115 @@ class ManifestScanSpec extends AnyFunSuite {
         try out.write(stripped.getBytes("UTF-8")) finally out.close()
       }
     // committed manifests are immutable in production, so readers memo
-    // them — this simulation mutates one in place and must invalidate
+    // them — this simulation mutates them in place and must invalidate
     Manifest.invalidateListMemo(path)
+  }
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+
+  /** A catalog-created table with rows 10 and 20 whose committed
+    * manifests have lost their `#flen` ledger; returns (path, version).
+    */
+  private def ledgerlessTable(name: String): (String, Long) = {
+    root
+    spark.sql(s"CREATE TABLE mscat.ns.$name (k BIGINT, cents BIGINT)")
+    spark.sql(s"INSERT INTO mscat.ns.$name VALUES (1, 10), (2, 20)")
+    val path = s"$root/ns/$name"
+    stripLedger(path)
     val v = Manifest.currentVersion(spark, path).get
     assert(Manifest.fileLengthsAsOf(spark, path, v).isEmpty,
       "fixture sanity: the ledger is gone")
-    // with the auto-backfill disabled, the ledger-less snapshot takes
-    // the legacy listing path and answers identically
-    spark.conf.set("spark.graft.read.autoBackfillLens", "false")
-    try {
-      val df = Manifest.read(spark, path)
-      assert(indexClassesOf(df).forall(c =>
-        !c.contains("ManifestFileIndex")),
-        "a ledger-less snapshot must take the legacy listing path")
-      assert(df.select("cents").as[Long].collect().sorted.toSeq ===
-        Seq(10L, 20L))
-    } finally spark.conf.unset("spark.graft.read.autoBackfillLens")
-    // round 17: with the default conf, the FIRST read pays the one
-    // listing and commits the ledger back (a metadata-only version);
-    // the read itself — and every later one — resolves zero-listing,
-    // with no manual pinSchema
-    val df1 = Manifest.read(spark, path)
-    assert(indexClassesOf(df1).forall(_.contains("ManifestFileIndex")),
-      "the auto-backfilled read must be manifest-served")
-    assert(df1.select("cents").as[Long].collect().sorted.toSeq ===
-      Seq(10L, 20L))
-    val v1 = Manifest.currentVersion(spark, path).get
-    assert(v1 === v + 1, "the backfill is one metadata-only commit")
-    val lens1 = Manifest.fileLengthsAsOf(spark, path, v1)
-    assert(Manifest.filesAsOf(spark, path, v1).forall(lens1.contains))
+    (path, v)
+  }
+
+  private val upgrade =
+    "Manifest.commit(spark, path, Manifest.currentLive(spark, path))"
+
+  /** Run the named one-shot upgrade on a ledger-less table at version
+    * `v` and check it stats every file without changing the file set.
+    */
+  private def repairLedger(path: String, v: Long): Unit = {
+    val v1 = Manifest.commit(spark, path, Manifest.currentLive(spark, path))
+    assert(v1 === v + 1)
+    val lens = Manifest.fileLengthsAsOf(spark, path, v1)
+    assert(Manifest.filesAsOf(spark, path, v1).forall(lens.contains))
     assert(Manifest.filesAsOf(spark, path, v1).toSet ===
       Manifest.filesAsOf(spark, path, v).toSet,
-      "the backfill must not change the file set")
-    assert(indexClassesOf(Manifest.read(spark, path))
-      .forall(_.contains("ManifestFileIndex")))
-    // the next commit keeps a complete ledger
-    spark.sql("INSERT INTO mscat.ns.zl3 VALUES (3, 30)")
-    val v2 = Manifest.currentVersion(spark, path).get
-    val lens = Manifest.fileLengthsAsOf(spark, path, v2)
-    assert(Manifest.filesAsOf(spark, path, v2).forall(lens.contains))
-    assert(Manifest.read(spark, path).select("cents").as[Long]
-      .collect().sorted.toSeq === Seq(10L, 20L, 30L))
+      "the upgrade must not change the file set")
   }
 
-  test("the SQL catalog route auto-backfills too: the first SELECT of a " +
-      "ledger-less table commits the ledger and resolves zero-listing " +
-      "(round 17)") {
+  test("ledger-incomplete: Manifest.read fails loudly; " +
+      "one commit repairs it") {
+    val (path, v) = ledgerlessTable("zl3")
+    val e = intercept[IllegalStateException](Manifest.read(spark, path))
+    assert(e.getMessage.contains(upgrade), e.getMessage)
+    assert(Manifest.currentVersion(spark, path).get === v,
+      "a refused read must commit nothing")
+    repairLedger(path, v)
+    val df = Manifest.read(spark, path)
+    assert(indexClassesOf(df).forall(_.contains("ManifestFileIndex")))
+    assert(df.select("cents").as[Long].collect().sorted.toSeq ===
+      Seq(10L, 20L))
+  }
+
+  test("ledger-incomplete: a catalog SELECT fails loudly; " +
+      "one commit repairs it") {
+    val (path, v) = ledgerlessTable("zl9")
+    val e = intercept[Exception](
+      spark.sql("SELECT sum(cents) FROM mscat.ns.zl9").collect())
+    assert(messages(e).contains(upgrade), messages(e))
+    assert(Manifest.currentVersion(spark, path).get === v,
+      "a refused catalog load must commit nothing")
+    repairLedger(path, v)
+    val q = spark.sql("SELECT sum(cents) AS c FROM mscat.ns.zl9")
+    assert(indexClassesOf(q).forall(_.contains("ManifestFileIndex")))
+    assert(q.as[Long].head() === 30L)
+  }
+
+  test("a commit that cannot stat an added file commits nothing") {
     root
-    spark.sql("CREATE TABLE mscat.ns.zl5 (k BIGINT, cents BIGINT)")
-    spark.sql("INSERT INTO mscat.ns.zl5 VALUES (1, 10), (2, 20)")
-    val path = s"$root/ns/zl5"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mdir = new org.apache.hadoop.fs.Path(s"$path/_graft_manifest")
-    fs.listStatus(mdir).filter(_.getPath.getName.endsWith(".list"))
-      .foreach { st =>
-        val in = fs.open(st.getPath)
-        val lines = try new String(in.readAllBytes(), "UTF-8")
-          finally in.close()
-        val stripped = lines.split("\n").filterNot(_.startsWith("#flen "))
-          .mkString("\n")
-        val out = fs.create(st.getPath, true)
-        try out.write(stripped.getBytes("UTF-8")) finally out.close()
-      }
-    Manifest.invalidateListMemo(path)
+    spark.sql("CREATE TABLE mscat.ns.zl8 (k BIGINT)")
+    spark.sql("INSERT INTO mscat.ns.zl8 VALUES (1)")
+    val path = s"$root/ns/zl8"
     val v = Manifest.currentVersion(spark, path).get
-    assert(Manifest.fileLengthsAsOf(spark, path, v).isEmpty)
-    val df = spark.sql("SELECT sum(cents) AS c FROM mscat.ns.zl5")
-    assert(df.as[Long].head() === 30L)
-    assert(Manifest.currentVersion(spark, path).get === v + 1)
-    val idx = indexClassesOf(
-      spark.sql("SELECT sum(cents) AS c FROM mscat.ns.zl5"))
-    assert(idx.nonEmpty && idx.forall(_.contains("ManifestFileIndex")),
-      s"post-backfill catalog scan must be manifest-served, got: $idx")
+    val e = intercept[java.io.IOException](Manifest.commit(spark, path,
+      Manifest.currentLive(spark, path) :+ "k=1/never-written.parquet"))
+    assert(e.getMessage.contains("never-written.parquet"), e.getMessage)
+    assert(Manifest.currentVersion(spark, path).get === v)
+    assert(Manifest.read(spark, path).count() === 1L)
   }
 
-  test("pinSchema upgrades an unpinned library table onto the " +
-      "zero-listing path; values and partition types are unchanged") {
-    val base = Files.createTempDirectory("graft-pin").toString
+  test("an unpinned library table is manifest-served and reads like a " +
+      "listing read") {
+    val base = Files.createTempDirectory("graft-unpinned").toString
     val path = s"$base/t"
     Upsert.append(spark, path,
-      Seq((1L, 10L, java.sql.Date.valueOf("2024-07-01")),
-        (2L, 20L, java.sql.Date.valueOf("2024-07-02")))
-        .toDF("k", "cents", "d"), Some("d"))
-    val before = Manifest.read(spark, path)
-    assert(indexClassesOf(before).forall(c =>
-      !c.contains("ManifestFileIndex")),
-      "an unpinned table reads via the legacy listing path")
-    val beforeRows = before.orderBy("k").collect().map(_.toString).toSeq
-    val beforeSchema = before.schema
-    Manifest.pinSchema(spark, path)
-    val after = Manifest.read(spark, path)
-    assert(indexClassesOf(after).forall(_.contains("ManifestFileIndex")),
-      "the pinned table must read via the manifest-served index")
-    assert(after.schema === beforeSchema)
-    assert(after.orderBy("k").collect().map(_.toString).toSeq ===
-      beforeRows)
-    // double-pin refuses; appends after the pin stay on the fast path
-    intercept[IllegalArgumentException](Manifest.pinSchema(spark, path))
+      Seq((1L, 10L, java.sql.Date.valueOf("2024-07-01"), 7),
+        (2L, 20L, java.sql.Date.valueOf("2024-07-02"), 8))
+        .toDF("k", "cents", "d", "h"), Some("d"))
     Upsert.append(spark, path,
-      Seq((3L, 30L, java.sql.Date.valueOf("2024-07-03")))
-        .toDF("k", "cents", "d"), Some("d"))
-    val grown = Manifest.read(spark, path)
-    assert(indexClassesOf(grown).forall(_.contains("ManifestFileIndex")))
-    assert(grown.count() === 3L)
+      Seq((3L, 30L, java.sql.Date.valueOf("2024-07-03"), 9))
+        .toDF("k", "cents", "d", "h"), Some("d"))
+    val v = Manifest.currentVersion(spark, path).get
+    assert(Manifest.schemaAsOf(spark, path, v).isEmpty,
+      "fixture sanity: a library-created table pins no schema")
+    val served = Manifest.read(spark, path)
+    assert(indexClassesOf(served).nonEmpty &&
+      indexClassesOf(served).forall(_.contains("ManifestFileIndex")),
+      "an unpinned table must be manifest-served")
+    // the listing read of the SAME files: what the served read replaces
+    val listed = spark.read.option("basePath", path)
+      .parquet(Manifest.filesAsOf(spark, path, v).map(f => s"$path/$f"): _*)
+    assert(served.schema === listed.schema)
+    assert(served.schema("d").dataType ===
+      org.apache.spark.sql.types.DateType, "partition type from dir names")
+    assert(served.orderBy("k").collect().toSeq ===
+      listed.orderBy("k").collect().toSeq)
+    // partition pruning still works on the inferred partition column
+    assert(served.filter(col("d") === java.sql.Date.valueOf("2024-07-02"))
+      .select("k").as[Long].collect().toSeq === Seq(2L))
   }
 
   test("_metadata.file_modification_time on a manifest-served read is " +

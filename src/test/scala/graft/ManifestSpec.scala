@@ -127,14 +127,42 @@ class ManifestSpec extends AnyFunSuite {
       Seq("source_date=2024-05-01"))
   }
 
-  test("a pre-manifest table is adopted: read falls back, first write upgrades") {
+  test("a directory without a manifest is adopted only by an explicit commit") {
     val path = tmp()
     df((1, d1, "US", 100)).write.partitionBy("source_date").parquet(path)
     assert(Manifest.currentVersion(spark, path).isEmpty)
-    assert(content(path) === Set(1 -> 100)) // legacy fallback read
+    // the explicit adoption call named by every unmanaged-read failure
+    Manifest.commit(spark, path, Manifest.listDataFiles(spark, path))
+    assert(content(path) === Set(1 -> 100))
     Upsert.upsertPartitioned(spark, path, df((2, d2, "US", 200)),
       keys, "source_date")
-    assert(Manifest.currentVersion(spark, path) === Some(1L))
+    assert(Manifest.currentVersion(spark, path) === Some(2L))
+    assert(content(path) === Set(1 -> 100, 2 -> 200))
+  }
+
+  test("a read of a directory without a manifest fails loudly") {
+    val path = tmp()
+    df((1, d1, "US", 100)).write.partitionBy("source_date").parquet(path)
+    val adopt = "Manifest.commit(spark, path, Manifest.listDataFiles(spark, path))"
+    Seq[() => Any](() => Manifest.read(spark, path),
+      () => Manifest.currentLive(spark, path)).foreach { f =>
+      val e = intercept[IllegalStateException](f())
+      assert(e.getMessage.contains(adopt), e.getMessage)
+    }
+    // and a missing path is no table either
+    intercept[IllegalStateException](Manifest.read(spark, tmp()))
+  }
+
+  test("a replayed first append ignores the orphans of its crashed attempt") {
+    val path = tmp()
+    val batch = df((1, d1, "US", 100), (2, d1, "US", 200))
+    // the crashed attempt: files staged into the table, never committed
+    val staging = path + ".__crashed_staging"
+    batch.write.partitionBy("source_date").parquet(staging)
+    assert(Manifest.stageIn(spark, path, staging).nonEmpty)
+    assert(Manifest.currentVersion(spark, path).isEmpty)
+    Upsert.append(spark, path, batch, Some("source_date"))
+    assert(Manifest.read(spark, path).count() === 2L)
     assert(content(path) === Set(1 -> 100, 2 -> 200))
   }
 }

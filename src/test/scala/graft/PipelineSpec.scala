@@ -191,12 +191,14 @@ class PipelineSpec extends AnyFunSuite {
     // strict mode dies on this feed (PERMISSIVE is off); checked survives
     Pipeline.runDaily(spark, land5, wh5, "2024-05-01", checked = true)
     assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(wh5)).count() === 33)
-    val q = graft.engine.Manifest.read(spark, s"${Pipeline.quarantinePath(wh5)}/day=2024-05-01")
+    // the quarantine is a plain per-day parquet overwrite, not a
+    // manifest-managed table
+    val q = spark.read.parquet(s"${Pipeline.quarantinePath(wh5)}/day=2024-05-01")
       .select("reason").as[String].collect().toList
     assert(q === List("malformed_json"))
     // replay: same warehouse, no duplicated quarantine rows
     Pipeline.runDaily(spark, land5, wh5, "2024-05-01", checked = true)
-    assert(graft.engine.Manifest.read(spark, s"${Pipeline.quarantinePath(wh5)}/day=2024-05-01")
+    assert(spark.read.parquet(s"${Pipeline.quarantinePath(wh5)}/day=2024-05-01")
       .count() === 1)
     assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(wh5)).count() === 33)
     // unattended catch-up with the same poison: checked backfill routes
@@ -223,5 +225,72 @@ class PipelineSpec extends AnyFunSuite {
       java.nio.file.Files.copy(f, dst.resolve(f.getFileName.toString)))
     Files.createDirectories(java.nio.file.Paths.get(land2, "2024-05-03"))
     assert(Pipeline.backfill(spark, land2, wh4) === Seq("2024-05-01"))
+  }
+
+  test("backfill runs a date whose mart files were staged but never committed") {
+    // a crash between the royalties mart's stage-in and its FIRST
+    // commit leaves a data file no manifest lists; it must not mark the
+    // date done, nor leak into the table when the date re-runs
+    val whO = Files.createTempDirectory("graft-wh-orphan").toString
+    val orphanDir = java.nio.file.Paths.get(
+      Pipeline.martRoyaltiesPath(whO), "date=2024-05-01")
+    Files.createDirectories(orphanDir)
+    Seq(("Orphan Artist", 1.0)).toDF("artist_name", "royalties")
+      .coalesce(1).write.parquet(s"$whO/orphan_src")
+    val src = Files.list(java.nio.file.Paths.get(s"$whO/orphan_src"))
+      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+    Files.copy(src, orphanDir.resolve("part-00000-orphan.c000.snappy.parquet"))
+    assert(Pipeline.backfill(spark, landing, whO) ===
+      Seq("2024-05-01", "2024-05-02"))
+    // identical to the uninterrupted build of the same two dates
+    def rows(w: String) = graft.engine.Manifest
+      .read(spark, Pipeline.martRoyaltiesPath(w))
+      .select(col("date").cast("string"), col("artist_name"),
+        col("royalties")).as[(String, String, Double)].collect().toSet
+    assert(rows(whO) === rows(wh))
+    assert(!rows(whO).exists(_._2 == "Orphan Artist"))
+  }
+
+  test("after runDaily every table reads manifest-served, with no Spark job") {
+    val whZ = Files.createTempDirectory("graft-wh-zerojob").toString
+    Pipeline.runDaily(spark, landing, whZ, "2024-05-01")
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.synchronized {
+          jobs ++= e.stageInfos.map(_.name).take(1)
+        }
+    }
+    def drain(): Unit = org.apache.spark.graftshim.CoreShims
+      .drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // a steady day: every table already has a version to read
+      Pipeline.runDaily(spark, landing, whZ, "2024-05-02")
+      drain()
+      val inference = jobs.synchronized(jobs.toList)
+        .filter(_.startsWith("parquet at Manifest.scala"))
+      assert(inference.isEmpty,
+        s"a steady day ran schema-inference jobs: $inference")
+      Seq(Pipeline.odsPath(whZ), Pipeline.dimArtistPath(whZ),
+        Pipeline.dimCountryPath(whZ), Pipeline.dimSongPath(whZ),
+        Pipeline.factPath(whZ), Pipeline.martAvgPath(whZ),
+        Pipeline.martAppearancesPath(whZ),
+        Pipeline.martRoyaltiesPath(whZ)).foreach { p =>
+        drain()
+        jobs.synchronized(jobs.clear())
+        val df = graft.engine.Manifest.read(spark, p)
+        val indexes = df.queryExecution.analyzed.collect {
+          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+            l.relation.asInstanceOf[org.apache.spark.sql.execution
+              .datasources.HadoopFsRelation].location.getClass.getSimpleName
+        }
+        drain()
+        assert(indexes === Seq("ManifestFileIndex"), s"$p: $indexes")
+        assert(jobs.synchronized(jobs.isEmpty),
+          s"$p: resolving the read ran Spark jobs ${jobs.toList}")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
