@@ -13,7 +13,7 @@ import graft.star.StarBuilder
   * `README.md:56-59`), with the reference's cross-day semantics:
   * append-only ODS/fact keyed by their unique constraints, append-only
   * dims with stable `serial`-style ids ([[StarBuilder.dimIncremental]]),
-  * idempotent mart refresh per date. Every write is an anti-join upsert
+  * idempotent mart refresh per date. Every write is a keyed upsert
   * or a staged overwrite — re-running any day is a no-op
   * (PipelineSpec).
   *
@@ -58,9 +58,7 @@ object Pipeline {
     //    listing, `transformed_from_s3_to_pg.py:22-25`) → idempotent ODS
     val day =
       if (!checked)
-        OdsBuilder.toOds(
-          spark.read.option("multiLine", value = true).schema(OdsBuilder.rawSchema)
-            .json(s"$landingRoot/$date/*.json"))
+        OdsBuilder.toOds(OdsBuilder.readRaw(spark, landingRoot, s"$date/*.json"))
       else {
         val res = OdsBuilder.ingestChecked(spark, landingRoot, s"$date/*.json")
         // the day is carried by the partition dir alone — a column too
@@ -200,11 +198,8 @@ object Pipeline {
       if (!fs.exists(p)) Seq.empty
       else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
     }
-    def hasJson(date: String): Boolean = {
-      val g = new org.apache.hadoop.fs.Path(s"$landingRoot/$date/*.json")
-      val fs = g.getFileSystem(conf)
-      Option(fs.globStatus(g)).exists(_.nonEmpty)
-    }
+    def hasJson(date: String): Boolean =
+      OdsBuilder.landedFiles(spark, s"$landingRoot/$date/*.json").nonEmpty
     val landed = ls(landingRoot).filter(datePat.matches(_)).filter(hasJson)
     // "done" comes from the royalties mart's LIVE snapshot partitions
     // (manifest-aware, round 11): a raw directory listing would count a

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions.col
 /** `ON CONFLICT DO NOTHING` as a library — the reference's entire
   * idempotency story (`transformed_from_s3_to_pg.py:146-151`,
   * `from_ods_to_dds_pg.py:50,63,80,101`; unique keys `ddl_ods.sql:23`,
-  * `ddl_dds.sql:4,10,18,31`) restated as read-existing → left-anti on the
-  * natural key → append (SURVEY §2.3 J5, §7.4.2).
+  * `ddl_dds.sql:4,10,18,31`) restated as a keyed append that keeps only
+  * rows whose natural key is not live yet (SURVEY §2.3 J5, §7.4.2).
   *
   * Guarantees: re-running any layer is a no-op (the replay contract the
   * reference gets from Postgres unique indexes), and — since round 11 —
@@ -19,12 +19,15 @@ import org.apache.spark.sql.functions.col
   * writers through Airflow sensors, and we keep the same single-writer
   * discipline via [[WriterLease]].
   *
-  * Scale notes: only the KEY COLUMNS of the existing table are read for
-  * the anti-join (column pruning reaches the parquet scan), and the
-  * anti-join shuffles on the key — no driver-side key collection, no
-  * broadcast of the (potentially huge) target. With a date-partitioned
-  * target, scoping the read to the incoming dates turns the existing-side
-  * scan into partition pruning.
+  * Scale notes: a date-partitioned upsert ([[upsertPartitioned]]) writes
+  * the batch once and compares partition directory NAMES against the
+  * manifest, so a batch of new dates costs its write and one commit —
+  * no read of the existing table, the way a unique-index probe costs
+  * nothing per new key. Only partitions the batch shares with live data
+  * are read, and only their key columns (column pruning reaches the
+  * parquet scan); the anti-join shuffles on the key — no driver-side key
+  * collection, no broadcast of the (potentially huge) target. Staged row
+  * counts come from parquet footers on the driver, not a counting job.
   */
 object Upsert {
 
@@ -74,19 +77,46 @@ object Upsert {
     */
   private def withStaged[A](spark: SparkSession, path: String,
       df: DataFrame, partCols: Seq[String], tag: String)(
-      commitFn: Seq[String] => A): A = {
+      commitFn: Seq[String] => A): A =
+    withStagingDir(spark, path, df, partCols, tag)(stagingPath =>
+      commitFn(Manifest.stageIn(spark, path, stagingPath)))
+
+  /** Write `df` under a fresh, call-unique sibling staging directory
+    * (partitioned by `partCols`; two concurrent writers never clobber
+    * each other's files), run `body` on its path, and ALWAYS delete it.
+    * The staging directory sits outside the table, so nothing in it is
+    * visible to readers or to vacuum's dead-file sweep.
+    */
+  private def withStagingDir[A](spark: SparkSession, path: String,
+      df: DataFrame, partCols: Seq[String], tag: String)(
+      body: String => A): A = {
     val stagingPath = s"$path.__${tag}_staging_" +
       java.util.UUID.randomUUID().toString.take(8)
-    val w0 = PartitionTransforms.materialize(df, partCols)
-      .write.mode("overwrite")
-    (if (partCols.nonEmpty) w0.partitionBy(partCols: _*) else w0)
-      .parquet(stagingPath)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try commitFn(Manifest.stageIn(spark, path, stagingPath))
-    finally {
+    try {
+      val w0 = PartitionTransforms.materialize(df, partCols)
+        .write.mode("overwrite")
+      (if (partCols.nonEmpty) w0.partitionBy(partCols: _*) else w0)
+        .parquet(stagingPath)
+      body(stagingPath)
+    } finally {
       fs.delete(new org.apache.hadoop.fs.Path(stagingPath), true); ()
     }
+  }
+
+  /** Rows in the parquet files `relFiles` under `root`, summed from their
+    * footers on the driver: one footer read per file, no Spark job.
+    */
+  private def footerRows(spark: SparkSession, root: String,
+      relFiles: Seq[String]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    relFiles.iterator.map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$root/$f"), conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
   }
 
   /** Rows of `incoming` whose natural key is absent from `existing` —
@@ -158,42 +188,87 @@ object Upsert {
     */
   private def checkedSnapshot(spark: SparkSession, path: String,
       incoming: DataFrame): Option[DataFrame] =
-    Manifest.currentVersion(spark, path) match {
-      case Some(v) if Manifest.filesAsOf(spark, path, v).isEmpty =>
-        Manifest.schemaAsOf(spark, path, v).foreach(st =>
-          requireSameShape(incoming.schema, st, path))
-        None
-      case _ =>
-        val table = Manifest.read(spark, path)
-        requireSameColumns(incoming, table, path)
-        Some(table)
+    checkedVersion(spark, path, incoming).map(_._2)
+
+  /** [[checkedSnapshot]] paired with the version it read, so a caller
+    * can resolve that version's file list without racing a concurrent
+    * lease-less append's commit.
+    */
+  private def checkedVersion(spark: SparkSession, path: String,
+      incoming: DataFrame): Option[(Long, DataFrame)] = {
+    val v = Manifest.requireVersion(spark, path)
+    if (Manifest.filesAsOf(spark, path, v).isEmpty) {
+      Manifest.schemaAsOf(spark, path, v).foreach(st =>
+        requireSameShape(incoming.schema, st, path))
+      None
+    } else {
+      val table = Manifest.readAsOf(spark, path, v)
+      requireSameColumns(incoming, table, path)
+      Some(v -> table)
     }
+  }
 
   /** Date-partitioned variant (S7): `partitionBy(dateCol)` makes every
     * run-date predicate downstream a partition-pruned scan (SURVEY §4
-    * date-scoping row), and lets the existing-side read prune to just the
-    * incoming dates.
+    * date-scoping row). Stage-then-dedupe-on-overlap:
+    *
+    *  1. `incoming` is staged ONCE, partitioned by `dateCol`, outside
+    *     the table;
+    *  2. the staged `dateCol=` directory names are listed on the driver
+    *     and intersected with the live partitions of the version the
+    *     drift check read;
+    *  3. disjoint (the daily case, a new date) → the staged files are
+    *     committed as they are: one write job, one commit, no read of
+    *     the existing table;
+    *  4. overlapping (replay, late data) → the staged batch is read back
+    *     and [[newRows]] runs against the live rows of the overlapping
+    *     partitions only; that delta is staged and committed.
+    *
+    * The NULL date is the `__HIVE_DEFAULT_PARTITION__` directory on both
+    * sides, so it overlaps like any other date and a NULL-date replay
+    * appends nothing ([[newRows]] is null-safe). Live files outside any
+    * `dateCol=` directory (a table laid out another way) always count as
+    * overlapping. Returns the number of rows appended.
     */
   def upsertPartitioned(spark: SparkSession, path: String, incoming: DataFrame,
       keys: Seq[String], dateCol: String): Long = {
-    // Pruning the existing side to incoming dates is only sound when the
-    // date participates in the natural key (true for ODS and fact:
-    // `ddl_ods.sql:23`, `ddl_dds.sql:31`).
+    // Restricting the existing side to the batch's partitions is only
+    // sound when the date participates in the natural key (true for ODS
+    // and fact: `ddl_ods.sql:23`, `ddl_dds.sql:31`).
     require(keys.contains(dateCol),
       s"partitioned upsert requires the date column '$dateCol' in the key $keys")
     WriterLease.withLease(spark, path) {
-      val toAppend =
+      val basis =
         if (tableExists(spark, path))
-          checkedSnapshot(spark, path, incoming).map { table =>
-            // Existing side pruned to the dates present in this batch —
-            // at scale this is the difference between scanning one day
-            // and the whole history.
-            val dates = incoming.select(col(dateCol)).distinct()
-            val existing = table.join(dates, Seq(dateCol), "left_semi")
-            newRows(incoming, existing, keys)
-          }.getOrElse(incoming)
-        else incoming
-      stagedAppend(spark, path, toAppend, Seq(dateCol))
+          checkedVersion(spark, path, incoming).map(_._1)
+        else None
+      withStagingDir(spark, path, incoming, Seq(dateCol), "upsert") {
+        staging =>
+        val stagingDir = new org.apache.hadoop.fs.Path(staging)
+        val stagedParts = stagingDir
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(stagingDir).filter(_.isDirectory)
+          .map(_.getPath.getName).toSet
+        val overlapping =
+          if (stagedParts.isEmpty) Seq.empty // an empty batch
+          else basis.toSeq.flatMap { v =>
+            // the write names the dirs after the column as the batch
+            // spells it, which the drift check pinned to the table's
+            val dirPrefix = stagedParts.head.takeWhile(_ != '=') + "="
+            Manifest.filesAsOf(spark, path, v).filter { f =>
+              val top = f.takeWhile(_ != '/')
+              stagedParts(top) || !top.startsWith(dirPrefix)
+            }
+          }
+        if (overlapping.isEmpty) commitStaged(spark, path, staging, None)._1
+        else {
+          val batch = spark.read.schema(incoming.schema).parquet(staging)
+          val existing =
+            Manifest.readSubsetAsOf(spark, path, basis.get, overlapping)
+          stagedAppend(spark, path, newRows(batch, existing, keys),
+            Seq(dateCol))
+        }
+      }
     }
   }
 
@@ -1118,47 +1193,41 @@ object Upsert {
     */
   private def stagedAppendTxn(spark: SparkSession, path: String,
       delta: DataFrame, partCols: Seq[String],
-      txn: Option[(String, Long)]): (Long, Boolean) = {
-    // staging dir is call-unique: two concurrent appends must not
-    // clobber each other's staged files
-    val stagingPath = s"$path.__delta_staging_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val mat = PartitionTransforms.materialize(delta, partCols)
-    val w0 = mat.write.mode("overwrite")
-    (if (partCols.nonEmpty) w0.partitionBy(partCols: _*) else w0)
-      .parquet(stagingPath)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      // explicit schema: an EMPTY partitioned batch stages zero files,
-      // which would fail schema inference
-      val n = spark.read.schema(mat.schema).parquet(stagingPath).count()
-      val committed: Boolean =
-        if (n > 0) {
-          // stage-in under job-unique names, then ONE snapshot commit
-          // of exactly this batch's files — a concurrent reader sees
-          // the whole batch or none of it, orphans from crashed writers
-          // are never resurrected (not even by a table's first commit),
-          // and a concurrent appender's files (preserved via the
-          // commit-time live resolution) are never dropped. Stage-in
-          // happens INSIDE the commit lock — see
-          // Manifest.appendStagedOptimistic (vacuum-vs-append race)
-          Manifest.appendStagedOptimistic(spark, path, stagingPath,
-            txn).isDefined
-        } else {
-          // an EMPTY epoch still records its marker (metadata-only
-          // commit) so a replay is detected — but only once the table
-          // has a first manifest (an empty-list v1 would be an
-          // unreadable husk; re-running an empty batch is harmless)
-          txn.nonEmpty && Manifest.currentVersion(spark, path).exists(_ =>
-            Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
-              scope = _ => false, expected = Set.empty,
-              retire = Set.empty, add = Seq.empty, txn = txn)).isDefined)
-        }
-      (n, committed)
-    } finally {
-      fs.delete(new org.apache.hadoop.fs.Path(stagingPath), true); ()
-    }
+      txn: Option[(String, Long)]): (Long, Boolean) =
+    withStagingDir(spark, path, delta, partCols, "delta")(
+      commitStaged(spark, path, _, txn))
+
+  /** Commit the batch staged at `stagingPath` as an append: the commit
+    * half of [[stagedAppendTxn]], with the same return value. An EMPTY
+    * batch (partitioned, it stages zero files) commits no data files.
+    */
+  private def commitStaged(spark: SparkSession, path: String,
+      stagingPath: String, txn: Option[(String, Long)]): (Long, Boolean) = {
+    val n = footerRows(spark, stagingPath,
+      Manifest.listDataFiles(spark, stagingPath))
+    val committed: Boolean =
+      if (n > 0) {
+        // stage-in under job-unique names, then ONE snapshot commit
+        // of exactly this batch's files — a concurrent reader sees
+        // the whole batch or none of it, orphans from crashed writers
+        // are never resurrected (not even by a table's first commit),
+        // and a concurrent appender's files (preserved via the
+        // commit-time live resolution) are never dropped. Stage-in
+        // happens INSIDE the commit lock — see
+        // Manifest.appendStagedOptimistic (vacuum-vs-append race)
+        Manifest.appendStagedOptimistic(spark, path, stagingPath,
+          txn).isDefined
+      } else {
+        // an EMPTY epoch still records its marker (metadata-only
+        // commit) so a replay is detected — but only once the table
+        // has a first manifest (an empty-list v1 would be an
+        // unreadable husk; re-running an empty batch is harmless)
+        txn.nonEmpty && Manifest.currentVersion(spark, path).exists(_ =>
+          Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
+            scope = _ => false, expected = Set.empty,
+            retire = Set.empty, add = Seq.empty, txn = txn)).isDefined)
+      }
+    (n, committed)
   }
 
   /** A table is a path with a committed manifest version; files in a
@@ -1195,13 +1264,10 @@ object Upsert {
           val preLive = Manifest.currentLive(spark, path)
           // the shared staged-write lifecycle (review fix, round 15 —
           // this was the last hand-rolled copy); rows counted from the
-          // moved files (footer metadata, not a data scan)
+          // moved files' footers
           withStaged(spark, path, incoming, partCols, "overwrite") {
             moved =>
-            val n =
-              if (moved.isEmpty) 0L
-              else spark.read.option("basePath", path)
-                .parquet(moved.map(f => s"$path/$f"): _*).count()
+            val n = footerRows(spark, path, moved)
             Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
               scope = _ => true, expected = preLive.toSet,
               retire = preLive.toSet, add = moved))

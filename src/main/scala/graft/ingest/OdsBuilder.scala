@@ -54,9 +54,33 @@ object OdsBuilder {
     * (`raw_from_api_to_s3.py:50`); without it every file is a
     * `_corrupt_record` (SURVEY §7.4.6).
     */
-  def readRaw(spark: SparkSession, root: String = fixtureRoot): DataFrame =
+  def readRaw(spark: SparkSession, root: String = fixtureRoot,
+      glob: String = "*/*.json"): DataFrame =
     spark.read.option("multiLine", value = true).schema(rawSchema)
-      .json(s"$root/*/*.json")
+      .json(jsonInputs(spark, root, glob): _*)
+
+  /** The files `pattern` matches, resolved on the driver with
+    * `globStatus`; empty when it matches nothing.
+    */
+  def landedFiles(spark: SparkSession, pattern: String): Seq[String] = {
+    val g = new org.apache.hadoop.fs.Path(pattern)
+    val fs = g.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(g)).toSeq.flatten.map(_.getPath.toString)
+  }
+
+  /** What a JSON read of `root/glob` is handed: the matched files, not
+    * the pattern. Given a pattern, Spark's reader first stats the
+    * literal string as a possible streaming-sink directory, which logs a
+    * `FileNotFoundException` warning on every read. A glob that matches
+    * nothing is passed through, so the read still fails with Spark's
+    * own PATH_NOT_FOUND.
+    */
+  private def jsonInputs(spark: SparkSession, root: String,
+      glob: String): Seq[String] = {
+    val pattern = s"$root/$glob"
+    val files = landedFiles(spark, pattern)
+    if (files.isEmpty) Seq(pattern) else files
+  }
 
   /** P1-P4 + J5-shaped dedup: flatten, project, cast, recover
     * (country, date) from the file path, first-wins dedup on the ODS key
@@ -145,7 +169,7 @@ object OdsBuilder {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(rawSchemaWithCorrupt)
-      .json(s"$root/$glob")
+      .json(jsonInputs(spark, root, glob): _*)
       .withColumn("src_file", url_decode(input_file_name()))
       .localCheckpoint()
 

@@ -254,43 +254,96 @@ class PipelineSpec extends AnyFunSuite {
   test("after runDaily every table reads manifest-served, with no Spark job") {
     val whZ = Files.createTempDirectory("graft-wh-zerojob").toString
     Pipeline.runDaily(spark, landing, whZ, "2024-05-01")
-    val jobs = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.synchronized {
-          jobs ++= e.stageInfos.map(_.name).take(1)
-        }
-    }
-    def drain(): Unit = org.apache.spark.graftshim.CoreShims
-      .drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // a steady day: every table already has a version to read
-      Pipeline.runDaily(spark, landing, whZ, "2024-05-02")
-      drain()
-      val inference = jobs.synchronized(jobs.toList)
-        .filter(_.startsWith("parquet at Manifest.scala"))
-      assert(inference.isEmpty,
-        s"a steady day ran schema-inference jobs: $inference")
-      Seq(Pipeline.odsPath(whZ), Pipeline.dimArtistPath(whZ),
-        Pipeline.dimCountryPath(whZ), Pipeline.dimSongPath(whZ),
-        Pipeline.factPath(whZ), Pipeline.martAvgPath(whZ),
-        Pipeline.martAppearancesPath(whZ),
-        Pipeline.martRoyaltiesPath(whZ)).foreach { p =>
-        drain()
-        jobs.synchronized(jobs.clear())
+    // a steady day: every table already has a version to read
+    val (_, dayJobs) = TestSpark.jobsDuring(
+      Pipeline.runDaily(spark, landing, whZ, "2024-05-02"))
+    val inference = dayJobs.filter(_.startsWith("parquet at Manifest.scala"))
+    assert(inference.isEmpty,
+      s"a steady day ran schema-inference jobs: $inference")
+    Seq(Pipeline.odsPath(whZ), Pipeline.dimArtistPath(whZ),
+      Pipeline.dimCountryPath(whZ), Pipeline.dimSongPath(whZ),
+      Pipeline.factPath(whZ), Pipeline.martAvgPath(whZ),
+      Pipeline.martAppearancesPath(whZ),
+      Pipeline.martRoyaltiesPath(whZ)).foreach { p =>
+      val (indexes, jobs) = TestSpark.jobsDuring {
         val df = graft.engine.Manifest.read(spark, p)
-        val indexes = df.queryExecution.analyzed.collect {
+        df.queryExecution.analyzed.collect {
           case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
             l.relation.asInstanceOf[org.apache.spark.sql.execution
               .datasources.HadoopFsRelation].location.getClass.getSimpleName
         }
-        drain()
-        assert(indexes === Seq("ManifestFileIndex"), s"$p: $indexes")
-        assert(jobs.synchronized(jobs.isEmpty),
-          s"$p: resolving the read ran Spark jobs ${jobs.toList}")
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(indexes === Seq("ManifestFileIndex"), s"$p: $indexes")
+      assert(jobs.isEmpty, s"$p: resolving the read ran Spark jobs $jobs")
+    }
+  }
+
+  test("a steady runDaily day counts staged rows from footers, not by a job") {
+    val whS = Files.createTempDirectory("graft-wh-steady").toString
+    Pipeline.runDaily(spark, landing, whS, "2024-05-01")
+    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        actions.synchronized { actions += funcName }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // a new date meets no live partition: the five upserts (ODS, fact,
+      // three marts) commit their staged write with no read-back, and
+      // staged rows are counted from parquet footers, not by a job
+      Pipeline.runDaily(spark, landing, whS, "2024-05-02")
+      org.apache.spark.graftshim.CoreShims
+        .drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val counts = actions.synchronized(actions.toList).filter(_ == "count")
+    assert(counts.isEmpty, s"a steady day ran ${counts.size} count actions")
+    assert(graft.engine.Manifest.read(spark, Pipeline.factPath(whS))
+      .count() === 66)
+  }
+
+  test("runDaily hands the reader resolved files: no missing-path warning") {
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    val logger = org.apache.logging.log4j.LogManager.getLogger(
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
+      .asInstanceOf[CoreLogger]
+    val warned = scala.collection.mutable.ArrayBuffer.empty[String]
+    val capture = new org.apache.logging.log4j.core.appender
+        .AbstractAppender("capture-file-stream-sink", null, null, true,
+          org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(
+            org.apache.logging.log4j.Level.WARN))
+          warned.synchronized {
+            warned += e.getMessage.getFormattedMessage
+          }
+    }
+    val level = logger.getLevel
+    capture.start()
+    logger.addAppender(capture)
+    logger.setLevel(org.apache.logging.log4j.Level.WARN)
+    try {
+      val whW = Files.createTempDirectory("graft-wh-warn").toString
+      Pipeline.runDaily(spark, landing, whW, "2024-05-01")
+      Pipeline.runDaily(spark, landing, whW, "2024-05-02", checked = true)
+    } finally {
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+      capture.stop()
+    }
+    assert(warned.synchronized(warned.toList).isEmpty)
+  }
+
+  test("runDaily of a date with no landed JSON still fails loudly") {
+    val whE = Files.createTempDirectory("graft-wh-nojson").toString
+    Seq(false, true).foreach { checked =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        Pipeline.runDaily(spark, landing, whE, "2030-01-01", checked))
+      assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+    }
   }
 }

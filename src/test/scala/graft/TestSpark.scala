@@ -16,4 +16,29 @@ object TestSpark {
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()
+
+  /** `body`'s result and the Spark jobs it ran, each named by its first
+    * stage. The listener bus is drained on both sides, so earlier jobs
+    * never leak in.
+    */
+  def jobsDuring[A](body: => A): (A, List[String]) = {
+    val sc = spark.sparkContext
+    def drain(): Unit =
+      org.apache.spark.graftshim.CoreShims.drainListenerBus(sc)
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.synchronized {
+          jobs ++= e.stageInfos.map(_.name).take(1)
+        }
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      drain()
+      (out, jobs.synchronized(jobs.toList))
+    } finally sc.removeSparkListener(listener)
+  }
 }

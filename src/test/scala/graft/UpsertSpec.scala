@@ -249,4 +249,73 @@ class UpsertSpec extends AnyFunSuite {
     assert(Upsert.upsertPartitioned(spark, path, ods, keys, "source_date") === 0)
     assert(graft.engine.Manifest.read(spark, path).count() === 66)
   }
+
+  private val odsKeys = Seq("rank", "source_date", "country")
+
+  test("a new-date partitioned upsert is one write job and one commit") {
+    val path = tmp()
+    Upsert.upsertPartitioned(spark, path,
+      Seq((1, d1, "US")).toDF("rank", "source_date", "country"),
+      odsKeys, "source_date")
+    val batch = Seq((1, d2, "US"), (2, d2, "US"))
+      .toDF("rank", "source_date", "country")
+    val (added, jobs) = TestSpark.jobsDuring(
+      Upsert.upsertPartitioned(spark, path, batch, odsKeys, "source_date"))
+    assert(added === 2)
+    assert(jobs.size === 1, s"expected only the staging write, ran $jobs")
+    assert(graft.engine.Manifest.versions(spark, path).size === 2)
+    assert(graft.engine.Manifest.read(spark, path).count() === 3)
+  }
+
+  test("a mixed batch dedups its live date and appends its new one") {
+    val path = tmp()
+    val day1 = Seq((1, d1, "US", "x"), (2, d1, "US", "y"))
+      .toDF("rank", "source_date", "country", "payload")
+    assert(Upsert.upsertPartitioned(spark, path, day1, odsKeys,
+      "source_date") === 2)
+    val mixed = Seq((1, d1, "US", "x-replayed"), (3, d1, "US", "late"),
+      (1, d2, "US", "z")).toDF("rank", "source_date", "country", "payload")
+    assert(Upsert.upsertPartitioned(spark, path, mixed, odsKeys,
+      "source_date") === 2)
+    val back = graft.engine.Manifest.read(spark, path)
+      .select(col("rank"), col("source_date"), col("payload"))
+      .as[(Int, Date, String)].collect().toSet
+    assert(back === Set((1, d1, "x"), (2, d1, "y"), (3, d1, "late"),
+      (1, d2, "z")))
+    assert(Upsert.upsertPartitioned(spark, path, mixed, odsKeys,
+      "source_date") === 0)
+  }
+
+  test("an empty partitioned batch appends 0 and commits no version") {
+    val path = tmp()
+    val empty = Seq.empty[(Int, Date, String)]
+      .toDF("rank", "source_date", "country")
+    assert(Upsert.upsertPartitioned(spark, path, empty, odsKeys,
+      "source_date") === 0)
+    assert(graft.engine.Manifest.currentVersion(spark, path).isEmpty)
+    Upsert.upsertPartitioned(spark, path,
+      Seq((1, d1, "US")).toDF("rank", "source_date", "country"),
+      odsKeys, "source_date")
+    assert(Upsert.upsertPartitioned(spark, path, empty, odsKeys,
+      "source_date") === 0)
+    assert(graft.engine.Manifest.versions(spark, path) === Seq(1L))
+  }
+
+  test("a NULL-date row is appended once, however often it is replayed") {
+    val path = tmp()
+    val batch = Seq((1, Option.empty[Date], "US"))
+      .toDF("rank", "source_date", "country")
+    val live = Seq((1, Option(d1), "US"))
+      .toDF("rank", "source_date", "country")
+    assert(Upsert.upsertPartitioned(spark, path, live, odsKeys,
+      "source_date") === 1)
+    assert(Upsert.upsertPartitioned(spark, path, batch, odsKeys,
+      "source_date") === 1)
+    assert(Upsert.upsertPartitioned(spark, path, batch, odsKeys,
+      "source_date") === 0)
+    assert(Upsert.upsertPartitioned(spark, path, batch.union(live),
+      odsKeys, "source_date") === 0)
+    assert(graft.engine.Manifest.read(spark, path).count() === 2)
+  }
 }
+
