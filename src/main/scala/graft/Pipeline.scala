@@ -12,15 +12,17 @@ import graft.star.StarBuilder
   * chain (`raw landing → ods.daily_data → dds star → dm marts`,
   * `README.md:56-59`), with the reference's cross-day semantics:
   * append-only ODS/fact keyed by their unique constraints, append-only
-  * dims with stable `serial`-style ids ([[StarBuilder.dimIncremental]]),
+  * dims with stable `serial`-style ids ([[StarBuilder.newDimRows]]),
   * idempotent mart refresh per date. Every write is a keyed upsert
   * or a staged overwrite — re-running any day is a no-op
   * (PipelineSpec).
   *
   * Scale notes: the day's ingest lists only that date's landing prefix;
   * ODS and fact are date-partitioned (downstream date predicates prune);
-  * dims are the only full-table rewrites (small relative to facts, and
-  * staged so readers never see a half-written table).
+  * dims append only the day's unseen keys, so no daily write rewrites a
+  * whole table. Every write, the checked ingest's quarantine included,
+  * stages outside the table and lands through one manifest commit, so
+  * readers never see a half-written table.
   */
 object Pipeline {
 
@@ -42,11 +44,12 @@ object Pipeline {
     * `checked = true` runs the poison-tolerant ingest
     * ([[OdsBuilder.ingestChecked]]): malformed/mis-shaped documents and
     * unparseable tracks land in the `ingest_quarantine` table
-    * (src_file, reason, detail; the day lives in the `day=` partition
-    * dir) instead of failing the day; on a clean feed the two modes
-    * produce identical ODS rows (`lastfm_ingest_checked` oracle). The
-    * quarantine write is an idempotent per-day overwrite — replays
-    * don't duplicate reject rows.
+    * (src_file, reason, detail, partitioned by the DATE column `day`)
+    * instead of failing the day; on a clean feed the two modes produce
+    * identical ODS rows (`lastfm_ingest_checked` oracle). The quarantine
+    * write is a manifest-committed replace of the day's partition
+    * ([[Upsert.overwritePartitions]]): replays don't duplicate reject
+    * rows, and a replay with nothing to reject empties the day.
     */
   def runDaily(spark: SparkSession, landingRoot: String, warehouse: String,
       date: String, checked: Boolean = false,
@@ -61,10 +64,11 @@ object Pipeline {
         OdsBuilder.toOds(OdsBuilder.readRaw(spark, landingRoot, s"$date/*.json"))
       else {
         val res = OdsBuilder.ingestChecked(spark, landingRoot, s"$date/*.json")
-        // the day is carried by the partition dir alone — a column too
-        // would put the same fact under two names on read-back
-        res.quarantine.write.mode("overwrite")
-          .parquet(s"${quarantinePath(warehouse)}/day=$date")
+        // a DATE partition column: the directory names read back as
+        // DATE, so a string `day` would fail the next day's drift check
+        Upsert.overwritePartitions(spark, quarantinePath(warehouse),
+          res.quarantine.withColumn("day", lit(date).cast("date")), "day",
+          expectedValues = Some(Seq(date)))
         res.ods
       }
     Upsert.upsertPartitioned(spark, odsPath(warehouse), day, OdsKeys, "source_date")
@@ -117,16 +121,20 @@ object Pipeline {
       .map(_.stripPrefix(s"$warehouse/")))
 
     // 7. self-healing maintenance (round 13): the daily appends leave a
-    //    few small files per table per day; once the accumulating
-    //    date-partitioned tables trip the small-file policy (~16 daily
-    //    commits at defaults), ONE lease-guarded compaction pass
-    //    rewrites them at target size — snapshot-isolated, so readers
-    //    (and the publication pinned above, which names VERSIONS) are
-    //    untouched. The reference would need a separate maintenance DAG.
-    engine.Compaction.autoCompact(spark, odsPath(warehouse),
-      partitionCol = Some("source_date"), policy = autoCompactPolicy)
-    engine.Compaction.autoCompact(spark, factPath(warehouse),
-      partitionCol = Some("date"), policy = autoCompactPolicy)
+    //    few small files per table per day; once an accumulating table
+    //    (ODS, fact, or a dim that gains keys most days) trips the
+    //    small-file policy (~16 daily commits at defaults), ONE
+    //    lease-guarded compaction pass rewrites it at target size —
+    //    snapshot-isolated, so readers (and the publication pinned above,
+    //    which names VERSIONS) are untouched. The reference would need a
+    //    separate maintenance DAG.
+    Seq(odsPath(warehouse) -> Some("source_date"),
+      factPath(warehouse) -> Some("date"), dimArtistPath(warehouse) -> None,
+      dimCountryPath(warehouse) -> None, dimSongPath(warehouse) -> None)
+      .foreach { case (table, partitionCol) =>
+        engine.Compaction.autoCompact(spark, table,
+          partitionCol = partitionCol, policy = autoCompactPolicy)
+      }
     // 8. ANN indexes riding this pipeline's tables reindex themselves
     //    once their corpus outgrows the build (round 18 — the policy
     //    half of round 17's reindex verb: the staleness check is one
@@ -218,33 +226,23 @@ object Pipeline {
     todo
   }
 
-  /** Read-extend-rewrite of a dim table as a snapshot commit (round
-    * 11): the new table is fully materialized in a staging dir (a lazy
-    * overwrite would delete the very files its plan still has to read),
-    * its files move into the table under fresh names, and ONE atomic
-    * [[graft.engine.Manifest]] commit replaces the live set — the old
-    * two-rename swap left a window where a concurrent reader found the
-    * dim directory ABSENT; now a reader sees the previous snapshot
-    * until the instant the new one is complete. A crash before the
-    * commit leaves the previous snapshot live and only unreferenced
-    * files behind (replay-safe; `Manifest.vacuum` collects them).
+  /** Append the dim's unseen keys ([[StarBuilder.newDimRows]]) as one
+    * snapshot commit and return the dim after it — `INSERT … ON
+    * CONFLICT DO NOTHING` into a `serial` table. Existing rows and
+    * their files stay as they are; a day with no new keys commits
+    * nothing. The append stages the new rows outside the table before
+    * moving them in, so its plan reads the snapshot it extends, and a
+    * crash before the commit leaves only unreferenced files behind
+    * (replay-safe; `Manifest.vacuum` collects them). The writer lease
+    * keeps the id base (max existing id) and the append one step.
     */
   private def upsertDim(spark: SparkSession, path: String,
       candidates: DataFrame, idCol: String, keys: Seq[String]): DataFrame =
       graft.engine.WriterLease.withLease(spark, path) {
     val existing = readOrEmpty(spark, path, candidates, idCol, keys)
-    val updated = StarBuilder.dimIncremental(existing, candidates, idCol, keys)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".staging")
-    updated.write.mode("overwrite").parquet(tmp.toString)
-    try {
-      val moved = graft.engine.Manifest.stageIn(spark, path, tmp.toString)
-      graft.engine.Manifest.commit(spark, path, moved)
-    } finally {
-      fs.delete(tmp, true); ()
-    }
-    graft.engine.Manifest.read(spark, path)
+    Upsert.append(spark, path,
+      StarBuilder.newDimRows(existing, candidates, idCol, keys), None)
+    readOrEmpty(spark, path, candidates, idCol, keys)
   }
 
   /** The dim's current snapshot, or an empty dim when it has no

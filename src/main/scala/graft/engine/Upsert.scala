@@ -65,15 +65,14 @@ object Upsert {
       PreparedPredicate(Nil, predicate)
   }
 
-  /** The staging lifecycle every snapshot mutation shares (extracted in
-    * round 15 — this had been hand-copied at each verb): write `df`
-    * under a fresh sibling staging directory (partitioned by
-    * `partCols`), move its files into the table under job-unique names
+  /** The staging lifecycle of every table write here: write `df` under
+    * a fresh sibling staging directory (partitioned by `partCols`),
+    * move its files into the table under job-unique names
     * ([[Manifest.stageIn]]), run `commitFn` on the moved table-relative
     * paths, and ALWAYS delete the staging directory — success or
     * failure, the table dir holds at worst unreferenced orphans for
     * vacuum. Callers own the commit semantics (plain, optimistic,
-    * expected-empty); this owns the mechanics.
+    * expected-empty); this and [[withStagingDir]] own the mechanics.
     */
   private def withStaged[A](spark: SparkSession, path: String,
       df: DataFrame, partCols: Seq[String], tag: String)(
@@ -85,7 +84,11 @@ object Upsert {
     * (partitioned by `partCols`; two concurrent writers never clobber
     * each other's files), run `body` on its path, and ALWAYS delete it.
     * The staging directory sits outside the table, so nothing in it is
-    * visible to readers or to vacuum's dead-file sweep.
+    * visible to readers or to vacuum's dead-file sweep. The write also
+    * makes `df` independent of the table: a plan that reads the table
+    * it is about to change finishes before anything moves in (a cache
+    * is no such barrier — a lost cached partition would recompute
+    * against the half-changed table).
     */
   private def withStagingDir[A](spark: SparkSession, path: String,
       df: DataFrame, partCols: Seq[String], tag: String)(
@@ -272,6 +275,21 @@ object Upsert {
     }
   }
 
+  /** SCD Type-1 merge for UNPARTITIONED tables — [[mergePartitioned]]'s
+    * semantics (incoming replaces same-key rows, unmatched rows
+    * survive) when there is no partition column to scope the rewrite
+    * by, so the WHOLE table rewrites: O(table), the honest cost of
+    * keyed replacement without physical key locality — use the
+    * partitioned verb for anything that accumulates. Snapshot-committed
+    * and conflict-checked like every rewrite (the optimistic scope is
+    * the entire live set; a concurrent blind append conflicts and the
+    * merge recomputes, bounded). Duplicate incoming keys are rejected
+    * up front, same as the partitioned verb.
+    */
+  def mergeParquet(spark: SparkSession, path: String, incoming: DataFrame,
+      keys: Seq[String]): Long =
+    merge(spark, path, incoming, keys, None)
+
   /** SCD Type-1 merge: `ON CONFLICT DO UPDATE` semantics — incoming
     * rows REPLACE existing rows with the same natural key; unmatched
     * existing rows survive. The reference only ever needs DO NOTHING
@@ -301,70 +319,19 @@ object Upsert {
     * merged (counted before any target mutation — the incoming plan may
     * read the target table itself).
     */
-  /** SCD Type-1 merge for UNPARTITIONED tables — [[mergePartitioned]]'s
-    * semantics (incoming replaces same-key rows, unmatched rows
-    * survive) when there is no partition column to scope the rewrite
-    * by, so the WHOLE table rewrites: O(table), the honest cost of
-    * keyed replacement without physical key locality — use the
-    * partitioned verb for anything that accumulates. Snapshot-committed
-    * and conflict-checked like every rewrite (the optimistic scope is
-    * the entire live set; a concurrent blind append conflicts and the
-    * merge recomputes, bounded). Duplicate incoming keys are rejected
-    * up front, same as the partitioned verb.
-    */
-  def mergeParquet(spark: SparkSession, path: String, incoming: DataFrame,
-      keys: Seq[String]): Long = {
-    val nIncoming = incoming.count()
-    val dupKeys = incoming.groupBy(keys.map(col): _*)
-      .count().filter(col("count") > 1).limit(1).collect()
-    require(dupKeys.isEmpty,
-      s"merge into $path: incoming affects the key ${dupKeys.head.toSeq.init.mkString("(", ",", ")")} more than once")
-    WriterLease.withLease(spark, path) {
-      if (!tableExists(spark, path)) {
-        stagedAppend(spark, path, incoming, Nil)
-        nIncoming
-      } else retryingConflicts(s"merge into $path") {
-        if (checkedSnapshot(spark, path, incoming).isEmpty) {
-          // empty CREATE TABLE'd shell: the insert still commits with a
-          // whole-table conflict scope — see [[appendIntoEmptyChecked]]
-          if (nIncoming > 0)
-            appendIntoEmptyChecked(spark, path, incoming, None)
-          nIncoming
-        } else {
-        val version = Manifest.requireVersion(spark, path)
-        val table = Manifest.readAsOf(spark, path, version)
-        val preLive = Manifest.filesAsOf(spark, path, version)
-        val kept = newRows(table, incoming, keys)
-        val merged =
-          kept.unionByName(incoming.select(table.columns.map(col): _*))
-        val stagingPath = s"$path.__merge_staging_" +
-          java.util.UUID.randomUUID().toString.take(8)
-        merged.write.mode("overwrite").parquet(stagingPath)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        try {
-          val movedIn = Manifest.stageIn(spark, path, stagingPath)
-          // whole-table scope: even a blind append into ANY file set
-          // conflicts (its rows could share keys with `incoming`, and
-          // silently keeping both would break the table's unique-key
-          // contract) — the merge recomputes over the post-append
-          // snapshot instead
-          Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
-            scope = _ => true, expected = preLive.toSet,
-            retire = preLive.toSet, add = movedIn))
-          nIncoming
-        } finally {
-          fs.delete(new org.apache.hadoop.fs.Path(stagingPath), true); ()
-        }
-        }
-      }
-    }
-  }
-
   def mergePartitioned(spark: SparkSession, path: String, incoming: DataFrame,
       keys: Seq[String], dateCol: String): Long = {
     require(keys.contains(dateCol),
       s"partitioned merge requires the date column '$dateCol' in the key $keys")
+    merge(spark, path, incoming, keys, Some(dateCol))
+  }
+
+  /** The body of both merge verbs: `dateCol` None rewrites the whole
+    * table under a whole-table conflict scope; Some rewrites, and
+    * conflict-scopes, only the partitions `incoming` touches.
+    */
+  private def merge(spark: SparkSession, path: String, incoming: DataFrame,
+      keys: Seq[String], dateCol: Option[String]): Long = {
     // pre-mutation guards: both run against an untouched target
     val nIncoming = incoming.count()
     val dupKeys = incoming.groupBy(keys.map(col): _*)
@@ -373,14 +340,14 @@ object Upsert {
       s"merge into $path: incoming affects the key ${dupKeys.head.toSeq.init.mkString("(", ",", ")")} more than once")
     WriterLease.withLease(spark, path) {
       if (!tableExists(spark, path)) {
-        stagedAppend(spark, path, incoming, Seq(dateCol))
+        stagedAppend(spark, path, incoming, dateCol.toSeq)
         nIncoming
       } else retryingConflicts(s"merge into $path") {
         if (checkedSnapshot(spark, path, incoming).isEmpty) {
           // empty CREATE TABLE'd shell — conflict-scoped insert, see
           // [[appendIntoEmptyChecked]]
           if (nIncoming > 0)
-            appendIntoEmptyChecked(spark, path, incoming, Some(dateCol))
+            appendIntoEmptyChecked(spark, path, incoming, dateCol)
         } else mergeOnce(spark, path, incoming, keys, dateCol)
         nIncoming
       }
@@ -410,15 +377,20 @@ object Upsert {
     }
 
   /** One merge attempt against ONE pinned snapshot version: compute the
-    * surviving rows of the touched partitions, stage, and commit
-    * optimistically — the commit validates that the touched partitions
-    * still hold exactly the files this attempt read (a lease-less
-    * append racing into one of them conflicts and triggers a recompute
-    * in [[retryingConflicts]]) and preserves any files a concurrent
-    * append landed OUTSIDE them.
+    * surviving rows of the touched partitions (the whole table when
+    * `dateCol` is None), stage, and commit optimistically — the commit
+    * validates that the touched partitions still hold exactly the files
+    * this attempt read (a lease-less append racing into one of them
+    * conflicts and triggers a recompute in [[retryingConflicts]]) and
+    * preserves any files a concurrent append landed OUTSIDE them.
+    * Unpartitioned, every live file is in scope: even a blind append
+    * into ANY file set conflicts, since its rows could share keys with
+    * `incoming` and silently keeping both would break the table's
+    * unique-key contract.
     */
   private def mergeOnce(spark: SparkSession, path: String,
-      incoming: DataFrame, keys: Seq[String], dateCol: String): Unit = {
+      incoming: DataFrame, keys: Seq[String],
+      dateCol: Option[String]): Unit = {
     val version = Manifest.requireVersion(spark, path)
     // pin table rows and file list to the SAME snapshot — resolving
     // them independently could straddle a concurrent append's commit
@@ -427,28 +399,32 @@ object Upsert {
     // null-safe date match: a NULL-date incoming row must pull the
     // existing NULL partition into `kept`, or its surviving rows
     // would be dropped by the __HIVE_DEFAULT_PARTITION__ replacement
-    val dates = incoming.select(col(dateCol).as("__m_date")).distinct()
-    val touched =
-      table.join(dates, col(dateCol) <=> col("__m_date"), "left_semi")
+    val touched = dateCol.fold(table) { d =>
+      val dates = incoming.select(col(d).as("__m_date")).distinct()
+      table.join(dates, col(d) <=> col("__m_date"), "left_semi")
+    }
     val kept = newRows(touched, incoming, keys) // existing rows NOT replaced
-    val merged = kept.unionByName(incoming.select(table.columns.map(col): _*))
-    val stagingPath = s"$path.__merge_staging_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    merged.write.mode("overwrite").partitionBy(dateCol).parquet(stagingPath)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val (movedIn, stagedParts) =
-        moveStagedPartitions(fs, path, stagingPath, Seq(dateCol))
-      val replacedParts = stagedParts.map(_ + "/")
-      val scope = (f: String) => replacedParts.exists(f.startsWith)
+    val merged = kept.unionByName(
+      incoming.select(table.columns.toIndexedSeq.map(col): _*))
+    withStaged(spark, path, merged, dateCol.toSeq, "merge") { movedIn =>
+      val scope: String => Boolean =
+        if (dateCol.isEmpty) _ => true else inDirs(leafDirs(movedIn))
       Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
         scope = scope, expected = preLive.filter(scope).toSet,
         retire = preLive.filter(scope).toSet, add = movedIn))
       ()
-    } finally {
-      fs.delete(new org.apache.hadoop.fs.Path(stagingPath), true); ()
     }
+  }
+
+  /** The partition leaf directories (`c1=v/c2=w`) of table-relative
+    * files. */
+  private def leafDirs(files: Seq[String]): Seq[String] =
+    files.map(f => f.split('/').init.mkString("/")).distinct
+
+  /** A commit scope holding every file under one of `dirs`. */
+  private def inDirs(dirs: Seq[String]): String => Boolean = {
+    val prefixes = dirs.map(_ + "/")
+    f => prefixes.exists(f.startsWith)
   }
 
   /** Bounded optimistic-conflict retry: recompute-from-scratch is the
@@ -468,49 +444,6 @@ object Upsert {
       }
     }
     out.get
-  }
-
-  /** Move each staged FILE (not the partition dir) into the live
-    * partition directory under its job-unique name; previous files stay
-    * in place, invisible to the next manifest. Returns (table-relative
-    * moved file paths, staged partition dir names).
-    */
-  private def moveStagedPartitions(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, stagingPath: String,
-      partCols: Seq[String]): (Seq[String], Seq[String]) = {
-    // walk the staged layout LEVEL BY LEVEL (round 16: multi-column
-    // ordered identity layouts) — level i admits only `<partCols(i)>=`
-    // directories, so a malformed staging tree fails closed instead of
-    // silently moving foreign dirs in
-    def leaves(dir: org.apache.hadoop.fs.Path,
-        level: Int): Seq[(org.apache.hadoop.fs.Path, String)] = {
-      val subs = fs.listStatus(dir).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith(s"${partCols(level)}="))
-      subs.toSeq.flatMap { d =>
-        if (level == partCols.size - 1) Seq(d -> d.getName)
-        else leaves(d, level + 1).map { case (p, rel) =>
-          p -> s"${d.getName}/$rel"
-        }
-      }
-    }
-    val stagedLeaves =
-      leaves(new org.apache.hadoop.fs.Path(stagingPath), 0)
-    val movedIn = stagedLeaves.flatMap { case (part, rel) =>
-      val targetDir = new org.apache.hadoop.fs.Path(path, rel)
-      fs.mkdirs(targetDir)
-      fs.listStatus(part).filter(_.isFile).map(_.getPath)
-        .filterNot(f => f.getName.startsWith("_") ||
-          f.getName.startsWith("."))
-        .map { f =>
-          val dst = new org.apache.hadoop.fs.Path(targetDir, f.getName)
-          if (!fs.rename(f, dst))
-            throw new java.io.IOException(
-              s"merge stage-in failed: $f -> $dst (manifest not " +
-                "committed; table snapshot unaffected — re-run)")
-          s"$rel/${f.getName}"
-        }
-    }
-    (movedIn, stagedLeaves.map(_._2))
   }
 
   /** Dynamic-partition OVERWRITE (round 11): every `dateCol` partition
@@ -569,66 +502,42 @@ object Upsert {
   }
 
   /** One overwrite attempt against one pinned snapshot — optimistic
-    * commit over the replaced-partition scope, like [[mergeOnce]]. */
+    * commit over the replaced-partition scope, like [[mergeOnce]]. Rows
+    * written are counted from the moved files' footers. */
   private def overwriteOnce(spark: SparkSession, path: String,
       incoming: DataFrame, partCols: Seq[String],
       expectedValues: Option[Seq[String]]): Long = {
-        val preLive = Manifest.currentLive(spark, path)
-        val stagingPath = s"$path.__overwrite_staging_" +
-          java.util.UUID.randomUUID().toString.take(8)
-        incoming.write.mode("overwrite").partitionBy(partCols: _*)
-          .parquet(stagingPath)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        try {
-          val staged = fs.listStatus(
-            new org.apache.hadoop.fs.Path(stagingPath))
-            .filter(_.isDirectory)
-            .filter(_.getPath.getName.startsWith(s"${partCols.head}="))
-          val n =
-            if (staged.isEmpty) 0L
-            else spark.read.option("basePath", stagingPath)
-              .parquet(staged.map(_.getPath.toString).toIndexedSeq: _*)
-              .count()
-          val (movedIn, stagedParts) =
-            moveStagedPartitions(fs, path, stagingPath, partCols)
-          val replaced = expectedValues match {
-            case Some(vals) =>
-              // Hive-escape the declared values: the staged directory
-              // names on disk are escaped (':' → '%3A' etc.), so a raw
-              // string comparison would flag a legitimate value with
-              // special characters as a leak (review fix, round 15).
-              // expectedValues is single-level by the layout require.
-              val expected = vals.map(v => s"${partCols.head}=" +
-                org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                  .escapePathName(v)).toSet
-              val leaked = stagedParts.filterNot(expected)
-              require(leaked.isEmpty,
-                s"overwritePartitions into $path: staged output for " +
-                  s"unexpected partitions ${leaked.mkString("[", ",", "]")}" +
-                  " — the compute leaked rows outside the declared set " +
-                  "(manifest not committed; table snapshot unaffected)")
-              expected.toSeq
-            case None => stagedParts
-          }
-          val replacedPrefixes = replaced.map(_ + "/")
-          val scope = (f: String) => replacedPrefixes.exists(f.startsWith)
-          Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
-            scope = scope, expected = preLive.filter(scope).toSet,
-            retire = preLive.filter(scope).toSet, add = movedIn))
-          n
-        } finally {
-          fs.delete(new org.apache.hadoop.fs.Path(stagingPath), true); ()
-        }
+    val preLive = Manifest.currentLive(spark, path)
+    withStaged(spark, path, incoming, partCols, "overwrite") { movedIn =>
+      val stagedParts = leafDirs(movedIn)
+      val replaced = expectedValues match {
+        case Some(vals) =>
+          // Hive-escape the declared values: the staged directory
+          // names on disk are escaped (':' → '%3A' etc.), so a raw
+          // string comparison would flag a legitimate value with
+          // special characters as a leak (review fix, round 15).
+          // expectedValues is single-level by the layout require.
+          val expected = vals.map(v => s"${partCols.head}=" +
+            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+              .escapePathName(v)).toSet
+          val leaked = stagedParts.filterNot(expected)
+          require(leaked.isEmpty,
+            s"overwritePartitions into $path: staged output for " +
+              s"unexpected partitions ${leaked.mkString("[", ",", "]")}" +
+              " — the compute leaked rows outside the declared set " +
+              "(manifest not committed; table snapshot unaffected)")
+          expected.toSeq
+        case None => stagedParts
+      }
+      val scope = inDirs(replaced)
+      val n = footerRows(spark, path, movedIn)
+      Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
+        scope = scope, expected = preLive.filter(scope).toSet,
+        retire = preLive.filter(scope).toSet, add = movedIn))
+      n
     }
+  }
 
-  /** Materialize the delta to a STAGING DIRECTORY, then append from that.
-    * The delta's plan reads the target it is about to write; a cache
-    * (`persist` + `count`) is NOT a barrier — a lost cached partition
-    * recomputes its lineage against the half-appended target and
-    * corrupts the delta mid-write. A durably written staging copy makes
-    * the append's input independent of the target.
-    */
   /** Row-level DELETE — the last DML verb (append/upsert/merge/
     * overwrite exist; the reference gets `DELETE` from Postgres): keep
     * every file WITHOUT a matching row untouched, rewrite ONLY the
@@ -1262,9 +1171,7 @@ object Upsert {
         checkedSnapshot(spark, path, incoming) // drift check; shell flows
         retryingConflicts(s"overwriteTable into $path") {
           val preLive = Manifest.currentLive(spark, path)
-          // the shared staged-write lifecycle (review fix, round 15 —
-          // this was the last hand-rolled copy); rows counted from the
-          // moved files' footers
+          // rows counted from the moved files' footers
           withStaged(spark, path, incoming, partCols, "overwrite") {
             moved =>
             val n = footerRows(spark, path, moved)

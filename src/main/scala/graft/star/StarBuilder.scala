@@ -79,14 +79,16 @@ object StarBuilder {
   private def dim(df: DataFrame, idCol: String, naturalKey: Seq[String]): DataFrame =
     withSurrogateId(df.select(naturalKey.map(col): _*).distinct(), idCol, naturalKey)
 
-  /** Incremental dim upsert — the cross-day `serial` semantics
-    * (`ddl_dds.sql:3,9,15` + `ON CONFLICT DO NOTHING`,
-    * `from_ods_to_dds_pg.py:50,63,80`): existing rows keep their ids
-    * forever; unseen natural keys get ids starting at max(existing)+1,
-    * ranked deterministically within the batch. Day-over-day id
-    * stability is what lets the fact table reference dims append-only.
+  /** The rows a dim gains from `candidates` — the cross-day `serial`
+    * semantics (`ddl_dds.sql:3,9,15` + `ON CONFLICT DO NOTHING`,
+    * `from_ods_to_dds_pg.py:50,63,80`): only natural keys absent from
+    * `existing`, with ids starting at max(existing)+1, ranked
+    * deterministically within the batch. Existing rows keep their ids
+    * forever, so appending these rows is the whole dim update;
+    * day-over-day id stability is what lets the fact table reference
+    * dims append-only.
     */
-  def dimIncremental(existing: DataFrame, candidates: DataFrame,
+  def newDimRows(existing: DataFrame, candidates: DataFrame,
       idCol: String, naturalKey: Seq[String]): DataFrame = {
     val keys = naturalKey.map(col)
     // Null-safe anti-join: a NULL key component (all-zero-duration date
@@ -95,10 +97,14 @@ object StarBuilder {
     val fresh = graft.engine.Upsert.newRows(
       candidates.select(keys: _*).distinct(), existing, naturalKey)
     val base = existing.agg(coalesce(max(col(idCol)), lit(0L))).head().getLong(0)
-    val assigned = withSurrogateId(fresh, idCol, naturalKey)
+    withSurrogateId(fresh, idCol, naturalKey)
       .withColumn(idCol, col(idCol) + base)
-    existing.unionByName(assigned)
   }
+
+  /** The whole dim after `candidates`: `existing` plus [[newDimRows]]. */
+  def dimIncremental(existing: DataFrame, candidates: DataFrame,
+      idCol: String, naturalKey: Seq[String]): DataFrame =
+    existing.unionByName(newDimRows(existing, candidates, idCol, naturalKey))
 
   /** `INSERT INTO dds.dim_artist ... SELECT DISTINCT artist_name`
     * (`from_ods_to_dds_pg.py:56-64`).

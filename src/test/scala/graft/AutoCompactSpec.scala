@@ -155,4 +155,48 @@ class AutoCompactSpec extends AnyFunSuite {
     // and the day's rows are intact
     assert(Manifest.read(spark, s"$wh/ods_daily_data").count() === 2)
   }
+
+  test("runDaily compacts an append-only dim; its rows and ids stay " +
+      "byte-equal") {
+    val landing = Files.createTempDirectory("graft-autoc-dim-land").toString
+    // one country; day 2 repeats day 1's songs (no new dim key), day 3
+    // adds SongC — the second file of dim_song
+    def land(day: String, songs: Seq[(String, Int)]): Unit = {
+      val tracks = songs.zipWithIndex.map { case ((name, dur), i) =>
+        s"""{"name":"$name","duration":"$dur","listeners":"${10 + i}",
+           | "mbid":"m$i","url":"u$i",
+           | "streamable":{"#text":"1","fulltrack":"0"},
+           | "artist":{"name":"ArtA","mbid":"am1","url":"au"},
+           | "image":[],"@attr":{"rank":"${i + 1}"}}""".stripMargin
+      }
+      new java.io.File(s"$landing/$day").mkdirs()
+      val w = new java.io.PrintWriter(s"$landing/$day/Atlantis_$day.json")
+      try w.write(tracks.mkString("""{"tracks":{"track":[""", ",", "]}}"))
+      finally w.close()
+    }
+    val days = Seq("2009-03-01", "2009-03-02", "2009-03-03")
+    land(days(0), Seq("SongA" -> 200, "SongB" -> 100))
+    land(days(1), Seq("SongA" -> 200, "SongB" -> 100))
+    land(days(2), Seq("SongA" -> 200, "SongB" -> 100, "SongC" -> 300))
+    val tight = Files.createTempDirectory("graft-autoc-dim-tight").toString
+    val plain = Files.createTempDirectory("graft-autoc-dim-plain").toString
+    val song = (wh: String) => s"$wh/dds_dim_song"
+    def run(wh: String, day: String, policy: Compaction.AutoPolicy) =
+      Pipeline.runDaily(spark, landing, wh, day, autoCompactPolicy = policy)
+    days.foreach(run(plain, _, Compaction.AutoPolicy()))
+    run(tight, days(0), Compaction.AutoPolicy(minFiles = 2))
+    run(tight, days(1), Compaction.AutoPolicy(minFiles = 2))
+    // no new key on day 2: no dim commit, so nothing to compact
+    assert(Manifest.versions(spark, song(tight)).size === 1)
+    run(tight, days(2), Compaction.AutoPolicy(minFiles = 2))
+    // day 3's append made two files, and the pass folded them into one
+    assert(Manifest.versions(spark, song(tight)).size === 3)
+    assert(Manifest.currentLive(spark, song(tight)).size === 1)
+    assert(Manifest.currentLive(spark, song(plain)).size === 2)
+    def rows(wh: String) = Manifest.read(spark, song(wh))
+      .as[(Long, String, Long)].collect().toSet
+    assert(rows(tight) === rows(plain))
+    assert(rows(tight) === Set((1L, "SongA", 200L), (2L, "SongB", 100L),
+      (3L, "SongC", 300L)))
+  }
 }

@@ -191,15 +191,15 @@ class PipelineSpec extends AnyFunSuite {
     // strict mode dies on this feed (PERMISSIVE is off); checked survives
     Pipeline.runDaily(spark, land5, wh5, "2024-05-01", checked = true)
     assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(wh5)).count() === 33)
-    // the quarantine is a plain per-day parquet overwrite, not a
-    // manifest-managed table
-    val q = spark.read.parquet(s"${Pipeline.quarantinePath(wh5)}/day=2024-05-01")
-      .select("reason").as[String].collect().toList
+    // the quarantine is a manifest-managed table partitioned by `day`
+    def quarantined(w: String) =
+      graft.engine.Manifest.read(spark, Pipeline.quarantinePath(w))
+        .filter(col("day") === lit("2024-05-01").cast("date"))
+    val q = quarantined(wh5).select("reason").as[String].collect().toList
     assert(q === List("malformed_json"))
     // replay: same warehouse, no duplicated quarantine rows
     Pipeline.runDaily(spark, land5, wh5, "2024-05-01", checked = true)
-    assert(spark.read.parquet(s"${Pipeline.quarantinePath(wh5)}/day=2024-05-01")
-      .count() === 1)
+    assert(quarantined(wh5).count() === 1)
     assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(wh5)).count() === 33)
     // unattended catch-up with the same poison: checked backfill routes
     // it instead of aborting (fresh warehouse, both days from landing)
@@ -212,6 +212,63 @@ class PipelineSpec extends AnyFunSuite {
     assert(Pipeline.backfill(spark, land5, wh6, checked = true) ===
       Seq("2024-05-01", "2024-05-02"))
     assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(wh6)).count() === 66)
+  }
+
+  test("a clean replay after the poison file is removed empties the " +
+      "day's quarantine") {
+    val whQ = Files.createTempDirectory("graft-wh-requarantine").toString
+    val landQ = Files.createTempDirectory("graft-landing-requarantine")
+    // both days poisoned, so the table keeps a day once the first empties
+    val days = Seq("2024-05-01", "2024-05-02")
+    days.foreach { d =>
+      val dst = landQ.resolve(d)
+      Files.createDirectories(dst)
+      Files.list(java.nio.file.Paths.get(landing, d)).forEach(f =>
+        Files.copy(f, dst.resolve(f.getFileName.toString)))
+      Files.writeString(dst.resolve(s"Atlantis_$d.json"),
+        """{ "tracks": { "track": [""")
+      Pipeline.runDaily(spark, landQ.toString, whQ, d, checked = true)
+    }
+    def quarantined(d: String) =
+      graft.engine.Manifest.read(spark, Pipeline.quarantinePath(whQ))
+        .filter(col("day") === lit(d).cast("date")).count()
+    assert(days.map(quarantined) === Seq(1, 1))
+    Files.delete(landQ.resolve("2024-05-01/Atlantis_2024-05-01.json"))
+    Pipeline.runDaily(spark, landQ.toString, whQ, "2024-05-01", checked = true)
+    assert(days.map(quarantined) === Seq(0, 1))
+    assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(whQ))
+      .count() === 66)
+  }
+
+  private val dimPaths = (w: String) => Seq(Pipeline.dimArtistPath(w),
+    Pipeline.dimCountryPath(w), Pipeline.dimSongPath(w))
+  private lazy val whD = Files.createTempDirectory("graft-wh-dims").toString
+
+  test("a day with new keys keeps the previous dim files live and adds " +
+      "only the new keys' rows") {
+    Pipeline.runDaily(spark, landing, whD, "2024-05-01")
+    val song = Pipeline.dimSongPath(whD)
+    val live1 = graft.engine.Manifest.currentLive(spark, song)
+    val rows1 = graft.engine.Manifest.read(spark, song).collect().toSet
+    Pipeline.runDaily(spark, landing, whD, "2024-05-02")
+    val live2 = graft.engine.Manifest.currentLive(spark, song)
+    val rows2 = graft.engine.Manifest.read(spark, song).collect().toSet
+    assert(live1.toSet.subsetOf(live2.toSet),
+      "the day rewrote dim files that were already live")
+    val added = spark.read.parquet(
+      (live2.toSet -- live1).toSeq.map(f => s"$song/$f"): _*)
+      .collect().toSet
+    assert(added.nonEmpty, "day 2 should add new song keys")
+    assert(added === rows2 -- rows1)
+    assert(rows1.subsetOf(rows2))
+  }
+
+  test("a replayed runDaily day commits no new dim version") {
+    val before = dimPaths(whD)
+      .map(graft.engine.Manifest.currentVersion(spark, _))
+    Pipeline.runDaily(spark, landing, whD, "2024-05-02")
+    assert(dimPaths(whD).map(graft.engine.Manifest.currentVersion(spark, _))
+      === before)
   }
 
   test("backfill skips a landed date dir that has no files yet") {
@@ -281,26 +338,12 @@ class PipelineSpec extends AnyFunSuite {
   test("a steady runDaily day counts staged rows from footers, not by a job") {
     val whS = Files.createTempDirectory("graft-wh-steady").toString
     Pipeline.runDaily(spark, landing, whS, "2024-05-01")
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        actions.synchronized { actions += funcName }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      // a new date meets no live partition: the five upserts (ODS, fact,
-      // three marts) commit their staged write with no read-back, and
-      // staged rows are counted from parquet footers, not by a job
-      Pipeline.runDaily(spark, landing, whS, "2024-05-02")
-      org.apache.spark.graftshim.CoreShims
-        .drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    val counts = actions.synchronized(actions.toList).filter(_ == "count")
+    // a new date meets no live partition: the five upserts (ODS, fact,
+    // three marts) commit their staged write with no read-back, and
+    // staged rows are counted from parquet footers, not by a job
+    val (_, actions) = TestSpark.actionsDuring(
+      Pipeline.runDaily(spark, landing, whS, "2024-05-02"))
+    val counts = actions.filter(_ == "count")
     assert(counts.isEmpty, s"a steady day ran ${counts.size} count actions")
     assert(graft.engine.Manifest.read(spark, Pipeline.factPath(whS))
       .count() === 66)

@@ -41,4 +41,30 @@ object TestSpark {
       (out, jobs.synchronized(jobs.toList))
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `body`'s result and the Dataset actions it ran (`count`,
+    * `collect`, `save`, …), named as a `QueryExecutionListener` sees
+    * them. A job-name filter cannot stand in for this: under adaptive
+    * execution most jobs are named after an executor thread, not the
+    * action.
+    */
+  def actionsDuring[A](body: => A): (A, List[String]) = {
+    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        actions.synchronized { actions += funcName }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      org.apache.spark.graftshim.CoreShims
+        .drainListenerBus(spark.sparkContext)
+      (out, actions.synchronized(actions.toList))
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

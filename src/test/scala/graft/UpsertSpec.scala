@@ -317,5 +317,20 @@ class UpsertSpec extends AnyFunSuite {
       odsKeys, "source_date") === 0)
     assert(graft.engine.Manifest.read(spark, path).count() === 2)
   }
-}
 
+  test("overwritePartitions counts its rows from footers, not by a job") {
+    val path = tmp()
+    def batch(rows: (Int, Date, String)*) = rows.toDF("k", "d", "v")
+    Upsert.overwritePartitions(spark, path,
+      batch((1, d1, "a"), (2, d1, "b")), "d")
+    val (n, actions) = TestSpark.actionsDuring(
+      Upsert.overwritePartitions(spark, path,
+        batch((1, d1, "a2"), (3, d2, "c")), "d"))
+    assert(n === 2)
+    assert(!actions.contains("count"),
+      s"overwritePartitions ran a count action: $actions")
+    assert(graft.engine.Manifest.read(spark, path)
+      .select("k", "v").as[(Int, String)].collect().toSet ===
+      Set((1, "a2"), (3, "c")))
+  }
+}
