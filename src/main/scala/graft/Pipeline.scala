@@ -20,9 +20,10 @@ import graft.star.StarBuilder
   * Scale notes: the day's ingest lists only that date's landing prefix;
   * ODS and fact are date-partitioned (downstream date predicates prune);
   * dims append only the day's unseen keys, so no daily write rewrites a
-  * whole table. Every write, the checked ingest's quarantine included,
-  * stages outside the table and lands through one manifest commit, so
-  * readers never see a half-written table.
+  * whole table. Every table write stages outside the table and lands
+  * through one manifest commit, so readers never see a half-written
+  * table. The checked ingest's quarantine is the one side output
+  * outside the manifest: a plain per-day parquet overwrite.
   */
 object Pipeline {
 
@@ -44,12 +45,12 @@ object Pipeline {
     * `checked = true` runs the poison-tolerant ingest
     * ([[OdsBuilder.ingestChecked]]): malformed/mis-shaped documents and
     * unparseable tracks land in the `ingest_quarantine` table
-    * (src_file, reason, detail, partitioned by the DATE column `day`)
-    * instead of failing the day; on a clean feed the two modes produce
-    * identical ODS rows (`lastfm_ingest_checked` oracle). The quarantine
-    * write is a manifest-committed replace of the day's partition
-    * ([[Upsert.overwritePartitions]]): replays don't duplicate reject
-    * rows, and a replay with nothing to reject empties the day.
+    * (src_file, reason, detail; the day lives in the `day=` partition
+    * dir) instead of failing the day; on a clean feed the two modes
+    * produce identical ODS rows (`lastfm_ingest_checked` oracle). The
+    * quarantine write is an idempotent per-day overwrite — replays
+    * don't duplicate reject rows, and a replay with nothing to reject
+    * empties the day.
     */
   def runDaily(spark: SparkSession, landingRoot: String, warehouse: String,
       date: String, checked: Boolean = false,
@@ -64,11 +65,10 @@ object Pipeline {
         OdsBuilder.toOds(OdsBuilder.readRaw(spark, landingRoot, s"$date/*.json"))
       else {
         val res = OdsBuilder.ingestChecked(spark, landingRoot, s"$date/*.json")
-        // a DATE partition column: the directory names read back as
-        // DATE, so a string `day` would fail the next day's drift check
-        Upsert.overwritePartitions(spark, quarantinePath(warehouse),
-          res.quarantine.withColumn("day", lit(date).cast("date")), "day",
-          expectedValues = Some(Seq(date)))
+        // the day is carried by the partition dir alone — a column too
+        // would put the same fact under two names on read-back
+        res.quarantine.write.mode("overwrite")
+          .parquet(s"${quarantinePath(warehouse)}/day=$date")
         res.ods
       }
     Upsert.upsertPartitioned(spark, odsPath(warehouse), day, OdsKeys, "source_date")

@@ -191,15 +191,15 @@ class PipelineSpec extends AnyFunSuite {
     // strict mode dies on this feed (PERMISSIVE is off); checked survives
     Pipeline.runDaily(spark, land5, wh5, "2024-05-01", checked = true)
     assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(wh5)).count() === 33)
-    // the quarantine is a manifest-managed table partitioned by `day`
-    def quarantined(w: String) =
-      graft.engine.Manifest.read(spark, Pipeline.quarantinePath(w))
-        .filter(col("day") === lit("2024-05-01").cast("date"))
-    val q = quarantined(wh5).select("reason").as[String].collect().toList
+    // the quarantine is a plain per-day parquet overwrite, not a
+    // manifest-managed table
+    val q = spark.read.parquet(s"${Pipeline.quarantinePath(wh5)}/day=2024-05-01")
+      .select("reason").as[String].collect().toList
     assert(q === List("malformed_json"))
     // replay: same warehouse, no duplicated quarantine rows
     Pipeline.runDaily(spark, land5, wh5, "2024-05-01", checked = true)
-    assert(quarantined(wh5).count() === 1)
+    assert(spark.read.parquet(s"${Pipeline.quarantinePath(wh5)}/day=2024-05-01")
+      .count() === 1)
     assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(wh5)).count() === 33)
     // unattended catch-up with the same poison: checked backfill routes
     // it instead of aborting (fresh warehouse, both days from landing)
@@ -218,34 +218,27 @@ class PipelineSpec extends AnyFunSuite {
       "day's quarantine") {
     val whQ = Files.createTempDirectory("graft-wh-requarantine").toString
     val landQ = Files.createTempDirectory("graft-landing-requarantine")
-    // both days poisoned, so the table keeps a day once the first empties
-    val days = Seq("2024-05-01", "2024-05-02")
-    days.foreach { d =>
-      val dst = landQ.resolve(d)
-      Files.createDirectories(dst)
-      Files.list(java.nio.file.Paths.get(landing, d)).forEach(f =>
-        Files.copy(f, dst.resolve(f.getFileName.toString)))
-      Files.writeString(dst.resolve(s"Atlantis_$d.json"),
-        """{ "tracks": { "track": [""")
-      Pipeline.runDaily(spark, landQ.toString, whQ, d, checked = true)
-    }
-    def quarantined(d: String) =
-      graft.engine.Manifest.read(spark, Pipeline.quarantinePath(whQ))
-        .filter(col("day") === lit(d).cast("date")).count()
-    assert(days.map(quarantined) === Seq(1, 1))
-    Files.delete(landQ.resolve("2024-05-01/Atlantis_2024-05-01.json"))
-    Pipeline.runDaily(spark, landQ.toString, whQ, "2024-05-01", checked = true)
-    assert(days.map(quarantined) === Seq(0, 1))
+    val d = "2024-05-01"
+    val dst = landQ.resolve(d)
+    Files.createDirectories(dst)
+    Files.list(java.nio.file.Paths.get(landing, d)).forEach(f =>
+      Files.copy(f, dst.resolve(f.getFileName.toString)))
+    Files.writeString(dst.resolve(s"Atlantis_$d.json"),
+      """{ "tracks": { "track": [""")
+    Pipeline.runDaily(spark, landQ.toString, whQ, d, checked = true)
+    def quarantined() =
+      spark.read.parquet(s"${Pipeline.quarantinePath(whQ)}/day=$d").count()
+    assert(quarantined() === 1)
+    Files.delete(dst.resolve(s"Atlantis_$d.json"))
+    Pipeline.runDaily(spark, landQ.toString, whQ, d, checked = true)
+    assert(quarantined() === 0)
     assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(whQ))
-      .count() === 66)
+      .count() === 33)
   }
-
-  private val dimPaths = (w: String) => Seq(Pipeline.dimArtistPath(w),
-    Pipeline.dimCountryPath(w), Pipeline.dimSongPath(w))
-  private lazy val whD = Files.createTempDirectory("graft-wh-dims").toString
 
   test("a day with new keys keeps the previous dim files live and adds " +
       "only the new keys' rows") {
+    val whD = Files.createTempDirectory("graft-wh-dims").toString
     Pipeline.runDaily(spark, landing, whD, "2024-05-01")
     val song = Pipeline.dimSongPath(whD)
     val live1 = graft.engine.Manifest.currentLive(spark, song)
@@ -264,11 +257,16 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("a replayed runDaily day commits no new dim version") {
-    val before = dimPaths(whD)
+    val whR = Files.createTempDirectory("graft-wh-dims-replay").toString
+    val dimVersions = () => Seq(Pipeline.dimArtistPath(whR),
+      Pipeline.dimCountryPath(whR), Pipeline.dimSongPath(whR))
       .map(graft.engine.Manifest.currentVersion(spark, _))
-    Pipeline.runDaily(spark, landing, whD, "2024-05-02")
-    assert(dimPaths(whD).map(graft.engine.Manifest.currentVersion(spark, _))
-      === before)
+    Seq("2024-05-01", "2024-05-02")
+      .foreach(Pipeline.runDaily(spark, landing, whR, _))
+    val before = dimVersions()
+    assert(before.forall(_.isDefined))
+    Pipeline.runDaily(spark, landing, whR, "2024-05-02")
+    assert(dimVersions() === before)
   }
 
   test("backfill skips a landed date dir that has no files yet") {
