@@ -96,21 +96,10 @@ object ChangeFeed {
     (readSubset(removed, dvFrom), readSubset(added, dvTo)) match {
       case (None, None) =>
         // no file changed in the range: an empty feed, typed off the
-        // snapshot schema (cheap — limit 0 prunes the scan to nothing).
-        // An EMPTY snapshot (freshly CREATE TABLE'd shell, or a fully
-        // deleted table) has no files to derive a shape from — its only
-        // shape is the pinned schema sidecar, so a new consumer on a
-        // shell gets a correctly-typed empty feed instead of a crash
-        val base =
-          if (to.nonEmpty) Manifest.readAsOf(spark, path, vTo).limit(0)
-          else pinned match {
-            case Some(st) => spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], st)
-            case None => throw new IllegalStateException(
-              s"change feed of $path at v$vTo: empty snapshot with no " +
-                "pinned schema — nothing to derive the feed's shape from")
-          }
-        base.withColumn(ChangeCol, lit(""))
+        // snapshot schema (limit 0 prunes the scan to nothing) — an
+        // empty table included, which reads as zero rows of its schema
+        Manifest.readAsOf(spark, path, vTo).limit(0)
+          .withColumn(ChangeCol, lit(""))
       case (o, n) =>
         val oldRows = o.getOrElse(emptyLike(n.get))
         val newRows = n.getOrElse(emptyLike(o.get))

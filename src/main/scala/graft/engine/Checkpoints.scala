@@ -31,6 +31,16 @@ import org.apache.spark.sql.execution.LogicalRDD
   * (propagate + shortcut + convergence diff), and a lazy checkpoint
   * would re-execute the round's plan per reference, which is the
   * 2^K-plan-blowup this seam exists to prevent.
+  *
+  * Not every materialization goes through this seam yet. Seven sites
+  * call `localCheckpoint` directly and so ignore `graft.iter.checkpoint`
+  * today: their blocks stay executor-local even under `reliable`. They
+  * are `GraphQueries.relaxRounds`' loop relation, the `ExpandPageRank`
+  * and `ExpandPpr` TVF rules' weighted relation, `DocQueries`'
+  * span-dedup `occ` and lm-surprisal transition table `tr`,
+  * `OdsBuilder.ingestChecked`'s raw day and `Multimodal`'s shared
+  * decode. Routing them through [[iter]] is ROADMAP.md direction 3,
+  * "Materialize at execution time, through one seam".
   */
 object Checkpoints {
 

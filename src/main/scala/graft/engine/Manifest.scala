@@ -51,6 +51,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * files with no manifest is not a table: every read fails loudly and
   * names the explicit adoption call,
   * `Manifest.commit(spark, path, Manifest.listDataFiles(spark, path))`.
+  * A version that lists no files IS a table, an empty one: it reads as
+  * zero rows of its pinned schema ([[readAsOf]]), every writer treats
+  * it like any other version, and [[commit]] pins the schema of a
+  * table it empties.
   */
 /** A concurrent commit changed the files this prepared commit was
   * computed against: its snapshot basis is gone (files it retires were
@@ -269,6 +273,13 @@ object Manifest {
     * version's `.schema` sidecar; once pinned it also carries forward,
     * so every later version stays readable under the evolved schema
     * without re-stating it. See [[addColumn]].
+    *
+    * An EMPTY table is a version that lists no files and has a schema
+    * ([[readAsOf]] reads it as zero rows of that schema). So a commit
+    * that empties a table with no pinned schema pins its predecessor's
+    * read schema (a driver-side footer read, no Spark job). Only a
+    * table's first commit can list zero files with no schema; pass
+    * `schema` there, as `CREATE TABLE` does.
     */
   def commit(spark: SparkSession, path: String, files: Seq[String],
       stats: FileStats.TableStats = Map.empty,
@@ -317,7 +328,12 @@ object Manifest {
       .getOrElse(Map.empty)
     FileStats.write(spark, path, next,
       (carried ++ stats).filter { case (f, _) => fileSet(f) })
+    // an emptied table keeps its shape: pin the predecessor's read
+    // schema when the version lists no files and none carries forward
     schema.orElse(prev.flatMap(v => schemaAsOf(spark, path, v)))
+      .orElse(prev.filter(v => files.isEmpty &&
+        filesAsOf(spark, path, v).nonEmpty)
+        .map(v => readAsOf(spark, path, v).schema))
       .foreach(st => writeSchemaSidecar(spark, path, next, st))
     // txn markers ride INSIDE the atomically-renamed list file — a
     // marker and the files it admits become visible together or not at
@@ -1284,11 +1300,23 @@ object Manifest {
   /** Time travel to a committed version (until [[vacuum]] retires it).
     * A version with a pinned schema (at or after an [[addColumn]]) is
     * read under it — columns absent from older files resolve to NULL.
+    * A version that lists no files is an EMPTY table — a `CREATE
+    * TABLE` before its first insert, or a table a rewrite emptied — and
+    * reads as zero rows of its pinned schema, through the same
+    * manifest-served scan as any other version.
     * @throws IllegalStateException (loudly) when `v` was retired by
     *         vacuum — hold a [[withSnapshotLease]] to keep a version
-    *         readable across concurrent vacuums
+    *         readable across concurrent vacuums — or lists no files and
+    *         pins no schema (see [[commit]])
     */
-  def readAsOf(spark: SparkSession, path: String, v: Long): DataFrame = {
+  def readAsOf(spark: SparkSession, path: String, v: Long): DataFrame =
+    readSubsetAsOf(spark, path, v, readableFiles(spark, path, v))
+
+  /** Version `v`'s file list, checked to be readable: committed, and
+    * with a shape to read it under when it lists no files.
+    */
+  private def readableFiles(spark: SparkSession, path: String,
+      v: Long): Seq[String] = {
     // hot path stays ONE metadata op (the manifest GET); the committed-
     // version listing is only paid on the miss path, for the diagnostic
     val files =
@@ -1303,9 +1331,13 @@ object Manifest {
               "should pin their snapshot with Manifest.withSnapshotLease, " +
               "and vacuum callers can set retainMillis as a grace floor")
       }
-    require(files.nonEmpty,
-      s"manifest v$v of $path lists no files — nothing to read")
-    readSubsetAsOf(spark, path, v, files)
+    if (files.isEmpty && schemaAsOf(spark, path, v).isEmpty)
+      throw new IllegalStateException(
+        s"version $v of $path lists no files and pins no schema, so it " +
+          "has no shape to read as an empty table. Pin the table's " +
+          "schema once: Manifest.commit(spark, path, Nil, schema = " +
+          "Some(<the table's StructType>))")
+    files
   }
 
   /** A column reference that treats `n` as a LITERAL identifier — a
@@ -1428,12 +1460,9 @@ object Manifest {
     * survive membership joins attached above.
     */
   private[graft] def readWithPositionsAsOf(spark: SparkSession,
-      path: String, v: Long): DataFrame = {
-    val files = filesAsOf(spark, path, v)
-    require(files.nonEmpty,
-      s"manifest v$v of $path lists no files — nothing to read")
-    readSubsetAsOf(spark, path, v, files, keepPositions = true)
-  }
+      path: String, v: Long): DataFrame =
+    readSubsetAsOf(spark, path, v, readableFiles(spark, path, v),
+      keepPositions = true)
 
   /** Move every data file under `stagingPath` into the table directory,
     * preserving relative (partition) structure — the stage-in step of a

@@ -28,6 +28,13 @@ import org.apache.spark.sql.functions.col
   * parquet scan); the anti-join shuffles on the key — no driver-side key
   * collection, no broadcast of the (potentially huge) target. Staged row
   * counts come from parquet footers on the driver, not a counting job.
+  *
+  * An empty table — a `CREATE TABLE` before its first insert, or a
+  * table a delete or overwrite emptied — is an ordinary snapshot: its
+  * manifest version lists no files and [[Manifest.readAsOf]] reads it
+  * as zero rows of its schema. Every verb here runs its one body over
+  * it; the only special case is a path with no version at all, whose
+  * first write defines the table.
   */
 object Upsert {
 
@@ -143,9 +150,7 @@ object Upsert {
       keys: Seq[String]): Long = WriterLease.withLease(spark, path) {
     val toAppend =
       if (tableExists(spark, path))
-        checkedSnapshot(spark, path, incoming)
-          .map(existing => newRows(incoming, existing, keys))
-          .getOrElse(incoming)
+        newRows(incoming, checkedVersion(spark, path, incoming)._2, keys)
       else incoming
     stagedAppend(spark, path, toAppend, Nil)
   }
@@ -160,15 +165,9 @@ object Upsert {
     * file-level property, not a footer conflict).
     */
   private def requireSameColumns(incoming: DataFrame, existing: DataFrame,
-      path: String): Unit =
-    requireSameShape(incoming.schema, existing.schema, path)
-
-  private def requireSameShape(
-      incoming: org.apache.spark.sql.types.StructType,
-      existing: org.apache.spark.sql.types.StructType,
       path: String): Unit = {
-    val in = incoming.map(f => f.name -> f.dataType).toMap
-    val ex = existing.map(f => f.name -> f.dataType).toMap
+    val in = incoming.schema.map(f => f.name -> f.dataType).toMap
+    val ex = existing.schema.map(f => f.name -> f.dataType).toMap
     val onlyIn = (in.keySet -- ex.keySet).toSeq.sorted
     val onlyEx = (ex.keySet -- in.keySet).toSeq.sorted
     require(onlyIn.isEmpty && onlyEx.isEmpty,
@@ -180,35 +179,17 @@ object Upsert {
       s"schema drift on upsert into $path: column types differ — ${retyped.mkString("; ")}")
   }
 
-  /** The current snapshot's rows, validated against `incoming`'s shape.
-    * `None` ⇔ the table is a freshly CREATE TABLE'd empty shell (a
-    * manifest version listing ZERO files): its only shape is the pinned
-    * schema sidecar — reading an empty file list is impossible — so the
-    * drift check runs against the pinned shape and callers treat the
-    * table as fresh (nothing to dedup, replace, or survive). This is
-    * what makes the catalog's documented `CREATE TABLE` → `INSERT INTO`
-    * flow work on the first insert (ADVICE r12).
-    */
-  private def checkedSnapshot(spark: SparkSession, path: String,
-      incoming: DataFrame): Option[DataFrame] =
-    checkedVersion(spark, path, incoming).map(_._2)
-
-  /** [[checkedSnapshot]] paired with the version it read, so a caller
-    * can resolve that version's file list without racing a concurrent
-    * lease-less append's commit.
+  /** The current version and its rows, validated against `incoming`'s
+    * shape. The version lets a caller resolve that snapshot's file list
+    * without racing a concurrent lease-less append's commit. An empty
+    * table is zero rows of its schema here like everywhere else.
     */
   private def checkedVersion(spark: SparkSession, path: String,
-      incoming: DataFrame): Option[(Long, DataFrame)] = {
+      incoming: DataFrame): (Long, DataFrame) = {
     val v = Manifest.requireVersion(spark, path)
-    if (Manifest.filesAsOf(spark, path, v).isEmpty) {
-      Manifest.schemaAsOf(spark, path, v).foreach(st =>
-        requireSameShape(incoming.schema, st, path))
-      None
-    } else {
-      val table = Manifest.readAsOf(spark, path, v)
-      requireSameColumns(incoming, table, path)
-      Some(v -> table)
-    }
+    val table = Manifest.readAsOf(spark, path, v)
+    requireSameColumns(incoming, table, path)
+    v -> table
   }
 
   /** Date-partitioned variant (S7): `partitionBy(dateCol)` makes every
@@ -243,7 +224,7 @@ object Upsert {
     WriterLease.withLease(spark, path) {
       val basis =
         if (tableExists(spark, path))
-          checkedVersion(spark, path, incoming).map(_._1)
+          Some(checkedVersion(spark, path, incoming)._1)
         else None
       withStagingDir(spark, path, incoming, Seq(dateCol), "upsert") {
         staging =>
@@ -339,42 +320,14 @@ object Upsert {
     require(dupKeys.isEmpty,
       s"merge into $path: incoming affects the key ${dupKeys.head.toSeq.init.mkString("(", ",", ")")} more than once")
     WriterLease.withLease(spark, path) {
-      if (!tableExists(spark, path)) {
+      if (!tableExists(spark, path))
         stagedAppend(spark, path, incoming, dateCol.toSeq)
-        nIncoming
-      } else retryingConflicts(s"merge into $path") {
-        if (checkedSnapshot(spark, path, incoming).isEmpty) {
-          // empty CREATE TABLE'd shell — conflict-scoped insert, see
-          // [[appendIntoEmptyChecked]]
-          if (nIncoming > 0)
-            appendIntoEmptyChecked(spark, path, incoming, dateCol)
-        } else mergeOnce(spark, path, incoming, keys, dateCol)
-        nIncoming
+      else retryingConflicts(s"merge into $path") {
+        mergeOnce(spark, path, incoming, keys, dateCol)
       }
+      nIncoming
     }
   }
-
-  /** Stage `incoming` and commit it with a WHOLE-TABLE conflict scope
-    * against an expected-EMPTY live set — the merge verbs' insert into
-    * a freshly CREATE TABLE'd shell. The old blind `stagedAppend`
-    * fallback had no conflict scope, so a concurrent lease-less append
-    * landing between the shell check and the commit could introduce
-    * rows sharing keys with `incoming`, silently violating the merge's
-    * unique-key contract (ADVICE r13). Here any such append makes the
-    * live set non-empty at commit time → [[CommitConflictException]] →
-    * the caller's [[retryingConflicts]] re-runs the shell check against
-    * the now-non-empty table and takes the full merge path. Vacuum-safe
-    * without in-lock stage-in because the caller holds the WRITER LEASE
-    * and [[Manifest.vacuum]] is lease-guarded.
-    */
-  private def appendIntoEmptyChecked(spark: SparkSession, path: String,
-      incoming: DataFrame, dateCol: Option[String]): Unit =
-    withStaged(spark, path, incoming, dateCol.toSeq, "merge") { moved =>
-      Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
-        scope = _ => true, expected = Set.empty,
-        retire = Set.empty, add = moved))
-      ()
-    }
 
   /** One merge attempt against ONE pinned snapshot version: compute the
     * surviving rows of the touched partitions (the whole table when
@@ -386,15 +339,16 @@ object Upsert {
     * Unpartitioned, every live file is in scope: even a blind append
     * into ANY file set conflicts, since its rows could share keys with
     * `incoming` and silently keeping both would break the table's
-    * unique-key contract.
+    * unique-key contract. Into an empty table the same scope expects no
+    * files, so an append that lands first conflicts and the retry
+    * merges against it.
     */
   private def mergeOnce(spark: SparkSession, path: String,
       incoming: DataFrame, keys: Seq[String],
       dateCol: Option[String]): Unit = {
-    val version = Manifest.requireVersion(spark, path)
     // pin table rows and file list to the SAME snapshot — resolving
     // them independently could straddle a concurrent append's commit
-    val table = Manifest.readAsOf(spark, path, version)
+    val (version, table) = checkedVersion(spark, path, incoming)
     val preLive = Manifest.filesAsOf(spark, path, version)
     // null-safe date match: a NULL-date incoming row must pull the
     // existing NULL partition into `kept`, or its surviving rows
@@ -491,9 +445,7 @@ object Upsert {
       if (!tableExists(spark, path)) {
         stagedAppend(spark, path, incoming, partCols)
       } else {
-        // drift check only — the body below is pure live-list arithmetic,
-        // so an empty CREATE TABLE'd shell (None) flows through unchanged
-        checkedSnapshot(spark, path, incoming)
+        checkedVersion(spark, path, incoming) // schema drift check
         retryingConflicts(s"overwritePartitions into $path") {
           overwriteOnce(spark, path, incoming, partCols, expectedValues)
         }
@@ -671,45 +623,43 @@ object Upsert {
       val predicate = prepared.predicate
       val cur = Manifest.requireVersion(spark, path)
       val live = Manifest.filesAsOf(spark, path, cur)
-      if (live.isEmpty) 0L
-      else {
-        val scan0 = Manifest.readWithPositionsAsOf(spark, path, cur)
-        val fpc = DeletionVectors.FilePathCol
-        val ric = DeletionVectors.RowIndexCol
-        val matches = prepared.attach(scan0).filter(predicate)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val newPos = matches.select(col(fpc).as("file"), col(ric).as("pos"))
-          val matched = newPos.count()
-          if (matched == 0L) 0L
-          else {
-            val appended = set.map { assignments =>
-              val tableCols = scan0.columns
-                .filterNot(c => c == fpc || c == ric).toIndexedSeq
-              assignments.keys.foreach(c => require(
-                tableCols.contains(c),
-                s"updateWhereMor into $path: SET column $c not in " +
-                  tableCols.mkString(",")))
-              matches.select(tableCols.map { c =>
-                assignments.get(c).map(_.as(c)).getOrElse(col(c))
-              }: _*)
-            }
-            morCommitTail(spark, path, cur, live, newPos, matched,
-              appended,
-              Manifest.layoutPartitionCols(live).getOrElse(Seq.empty),
-              wholeTableScope = false, what = "merge-on-read DML")
-            matched
+      val scan0 = Manifest.readWithPositionsAsOf(spark, path, cur)
+      val fpc = DeletionVectors.FilePathCol
+      val ric = DeletionVectors.RowIndexCol
+      val matches = prepared.attach(scan0).filter(predicate)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val newPos = matches.select(col(fpc).as("file"), col(ric).as("pos"))
+        val matched = newPos.count()
+        if (matched == 0L) 0L
+        else {
+          val appended = set.toSeq.map { assignments =>
+            val tableCols = scan0.columns
+              .filterNot(c => c == fpc || c == ric).toIndexedSeq
+            assignments.keys.foreach(c => require(
+              tableCols.contains(c),
+              s"updateWhereMor into $path: SET column $c not in " +
+                tableCols.mkString(",")))
+            matches.select(tableCols.map { c =>
+              assignments.get(c).map(_.as(c)).getOrElse(col(c))
+            }: _*)
           }
-        } finally { matches.unpersist(); () }
-      }
+          morCommitTail(spark, path, cur, live, newPos, matched,
+            appended,
+            Manifest.layoutPartitionCols(live).getOrElse(Seq.empty),
+            wholeTableScope = false, what = "merge-on-read DML")
+          matched
+        }
+      } finally { matches.unpersist(); () }
     }
 
   /** Shared commit tail of every merge-on-read mutation (DELETE /
     * UPDATE / round-18 MERGE matched actions): relativize the matched
     * positions to per-file pointer metadata, merge prior DV rows for
     * the touched files, enforce the broadcast cap, write ONE new DV
-    * object, optionally stage appended rows (updated copies, merge
-    * inserts), and swap everything in a single optimistic commit.
+    * object, stage the `appended` frames' rows (updated copies, merge
+    * inserts; none for a pure delete), and swap everything in a single
+    * optimistic commit.
     *
     * Prior-object merge filters to THIS statement's touched files by
     * the exact qualified URIs the scan captured: old objects are
@@ -729,7 +679,7 @@ object Upsert {
     */
   private def morCommitTail(spark: SparkSession, path: String, cur: Long,
       live: Seq[String], newPos: DataFrame, matched: Long,
-      appended: Option[DataFrame], partCols: Seq[String],
+      appended: Seq[DataFrame], partCols: Seq[String],
       wholeTableScope: Boolean, what: String): Unit = {
     val toRel = scannedFileToRel(path, what) _
     // per-file match counts: one driver row per touched file
@@ -776,22 +726,17 @@ object Upsert {
     val (scopeFn, expected): (String => Boolean, Set[String]) =
       if (wholeTableScope) ((_: String) => true, live.toSet)
       else (touchedSet, touchedSet)
-    appended match {
-      case None =>
-        Manifest.commitOptimistic(spark, path,
-          Manifest.PreparedCommit(
-            scope = scopeFn, expected = expected,
-            retire = Set.empty, add = Seq.empty, dvs = pointers))
-        ()
+    def commit(movedIn: Seq[String]) =
+      Manifest.commitOptimistic(spark, path,
+        Manifest.PreparedCommit(
+          scope = scopeFn, expected = expected,
+          retire = Set.empty, add = movedIn, dvs = pointers))
+    appended.reduceOption(_.unionByName(_)) match {
+      case None => commit(Nil)
       case Some(df) =>
-        withStaged(spark, path, df, partCols, "mor_update") { movedIn =>
-          Manifest.commitOptimistic(spark, path,
-            Manifest.PreparedCommit(
-              scope = scopeFn, expected = expected,
-              retire = Set.empty, add = movedIn, dvs = pointers))
-        }
-        ()
+        withStaged(spark, path, df, partCols, "mor_update")(commit)
     }
+    ()
   }
 
   /** REPLACE WHERE (round 17): delete-by-predicate + append in ONE
@@ -931,10 +876,11 @@ object Upsert {
       set: Option[Map[String, org.apache.spark.sql.Column]]): Long =
     WriterLease.withLease(spark, path) {
       val predicate = prepared.predicate
+      val verb = if (set.isEmpty) "deleteWhere" else "updateWhere"
       // pin rows, file list and touched-file re-read to ONE snapshot
       val cur = Manifest.requireVersion(spark, path)
       val table = Manifest.readAsOf(spark, path, cur)
-      val toRel = scannedFileToRel(path, "deleteWhere") _
+      val toRel = scannedFileToRel(path, verb) _
       // Touched-file discovery. Plain predicates keep the direct
       // predicate-pushed scan (filters reach parquet). With membership
       // joins, input_file_name() must be captured BEFORE the join — it
@@ -958,7 +904,7 @@ object Upsert {
                 .select(org.apache.spark.sql.functions.input_file_name())
             else {
               require(!table.columns.contains(fileCol),
-                s"rewriteMatching into $path: column $fileCol is reserved")
+                s"$verb into $path: column $fileCol is reserved")
               prepared.attach(table.withColumn(fileCol,
                   org.apache.spark.sql.functions.input_file_name()))
                 .filter(predicate).select(col(fileCol))
@@ -971,7 +917,7 @@ object Upsert {
         val live = Manifest.filesAsOf(spark, path, cur)
         val touchedSet = touched.toSet
         require(touchedSet.subsetOf(live.toSet),
-          s"deleteWhere into $path: scan saw files outside the live " +
+          s"$verb into $path: scan saw files outside the live " +
             s"snapshot: ${(touchedSet -- live.toSet).mkString(", ")}")
         // re-read ONLY the touched files; partition columns come back
         // via basePath, and the rewrite preserves the partition layout.
@@ -1003,7 +949,7 @@ object Upsert {
           case Some(assignments) =>
             assignments.keys.foreach(c => require(
               sub.columns.contains(c),
-              s"updateWhere into $path: SET column $c not in " +
+              s"$verb into $path: SET column $c not in " +
                 sub.columns.mkString(",")))
             aug.select(sub.columns.toIndexedSeq.map { c =>
               assignments.get(c) match {
@@ -1053,7 +999,7 @@ object Upsert {
     if (Manifest.lastTxn(spark, path, appId).exists(_ >= batchId)) false
     else {
       if (tableExists(spark, path))
-        checkedSnapshot(spark, path, incoming)
+        checkedVersion(spark, path, incoming)
       stagedAppendTxn(spark, path, incoming, dateCol.toSeq,
         txn = Some(appId -> batchId))._2
     }
@@ -1087,7 +1033,7 @@ object Upsert {
   def appendLayout(spark: SparkSession, path: String, incoming: DataFrame,
       partCols: Seq[String]): Long = {
     if (tableExists(spark, path))
-      checkedSnapshot(spark, path, incoming)
+      checkedVersion(spark, path, incoming)
     stagedAppend(spark, path, incoming, partCols)
   }
 
@@ -1129,8 +1075,8 @@ object Upsert {
       } else {
         // an EMPTY epoch still records its marker (metadata-only
         // commit) so a replay is detected — but only once the table
-        // has a first manifest (an empty-list v1 would be an
-        // unreadable husk; re-running an empty batch is harmless)
+        // has a first manifest (an empty-list v1 would pin no schema
+        // to read it under; re-running an empty batch is harmless)
         txn.nonEmpty && Manifest.currentVersion(spark, path).exists(_ =>
           Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
             scope = _ => false, expected = Set.empty,
@@ -1168,7 +1114,7 @@ object Upsert {
       if (!tableExists(spark, path))
         stagedAppend(spark, path, incoming, partCols)
       else {
-        checkedSnapshot(spark, path, incoming) // drift check; shell flows
+        checkedVersion(spark, path, incoming) // schema drift check
         retryingConflicts(s"overwriteTable into $path") {
           val preLive = Manifest.currentLive(spark, path)
           // rows counted from the moved files' footers
@@ -1325,10 +1271,11 @@ object Upsert {
         // By-source clauses stay copy-on-write: they act on rows the
         // source does NOT name, so the rewrite is whole-table either
         // way and the COW path's single staged rewrite is the better
-        // plan. Matched-free programs (insert-only) have nothing to
-        // DV.
+        // plan. Matched-free programs (insert-only) and an empty
+        // table have nothing to DV.
         val mor = matched.nonEmpty && bySource.isEmpty &&
-          dmlMode(spark, path) == "merge-on-read"
+          dmlMode(spark, path) == "merge-on-read" &&
+          Manifest.currentLive(spark, path).nonEmpty
         if (mor)
           mergeActionsOnceMor(spark, path, source, keys, matched,
             insert, partitionCols)
@@ -1360,9 +1307,6 @@ object Upsert {
     import org.apache.spark.sql.functions.{lit, when}
     val version = Manifest.requireVersion(spark, path)
     val preLive = Manifest.filesAsOf(spark, path, version)
-    if (preLive.isEmpty)
-      return mergeIntoEmptyShell(spark, path, version, source, keys,
-        matched, Seq.empty, insert, partitionCols)
     val scan0 = Manifest.readWithPositionsAsOf(spark, path, version)
     val fpc = DeletionVectors.FilePathCol
     val ric = DeletionVectors.RowIndexCol
@@ -1400,7 +1344,7 @@ object Upsert {
       }
       // UPDATE rows' new images: same per-column CASE writers as the
       // COW rewrite, restricted to rows whose fired clause updates
-      val updatedCopies: Option[DataFrame] =
+      val updatedCopies =
         if (updateIdx.isEmpty || nAffected == 0L) None
         else Some(decided
           .filter(col("__action").isin(updateIdx.map(p => Int.box(p._1)): _*))
@@ -1431,17 +1375,14 @@ object Upsert {
         insertProjection(filtered, spec, keys, targetCols, targetSchema)
       }
       val nInserted = insertRows.fold(0L)(_.count())
-      val appended = (updatedCopies, insertRows) match {
-        case (Some(u), Some(i)) => Some(u.unionByName(i))
-        case (Some(u), None) => Some(u)
-        case (None, Some(i)) if nInserted > 0 => Some(i)
-        case _ => None
-      }
+      // rows appended beside the DVs: updated copies, then inserts
+      val appended = updatedCopies.toSeq ++
+        insertRows.filter(_ => nInserted > 0)
       if (nAffected == 0L) {
         // nothing fired: a pure append (or a no-op). Whole-table scope
         // — the insert anti-join read the table (same reasoning as the
         // COW path's insert commit).
-        appended.filter(_ => nInserted > 0).foreach { df =>
+        appended.foreach { df =>
           withStaged(spark, path, df, partitionCols, "merge") { moved =>
             Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
               scope = _ => true, expected = preLive.toSet,
@@ -1465,14 +1406,6 @@ object Upsert {
     import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, when}
     val version = Manifest.requireVersion(spark, path)
     val preLive = Manifest.filesAsOf(spark, path, version)
-    if (preLive.isEmpty)
-      // a freshly CREATE TABLE'd shell or a fully-deleted table: a
-      // committed version listing ZERO files, which readAsOf refuses
-      // (ADVICE r14, medium). Matched AND by-source clauses can't fire
-      // (no target rows); inserts land through an expected-empty
-      // whole-table commit.
-      return mergeIntoEmptyShell(spark, path, version, source, keys,
-        matched, bySource, insert, partitionCols)
     val table = Manifest.readAsOf(spark, path, version)
     val targetCols = table.columns.toSeq
     requireNoReservedNames(path, targetCols, keys)
@@ -1629,23 +1562,20 @@ object Upsert {
 
     if (touched.isEmpty && nInserted == 0L) (nMatchedAffected, 0L)
     else {
-      val df = (rewritten, insertRows) match {
-        case (Some(r), Some(i)) => r.unionByName(i)
-        case (Some(r), None) => r
-        case (None, Some(i)) => i
-        case (None, None) => return (0L, 0L) // unreachable: guarded above
-      }
+      // a rewrite ran or a row is inserted (guarded above)
+      val df = (rewritten.toSeq ++ insertRows).reduce(_.unionByName(_))
       withStaged(spark, path, df, partitionCols, "merge") { moved =>
         // conflict scope: the touched files this merge read and
         // retires — plus, when an INSERT clause exists, the WHOLE live
         // set, because the insert's anti-join read the table and a
         // concurrent lease-less append could land the same key between
-        // that read and this commit (the unique-key hole ADVICE r13
-        // flagged on the shell path; mergeParquet makes the same
-        // whole-table choice). Matched-only merges keep the narrow
-        // file scope: an unseen appended row is merely not-updated —
-        // merge-before-append serialization, the same WriteSerializable
-        // contract as deleteWhere.
+        // that read and this commit (a second copy of a key; into an
+        // empty table the scope expects no files, so any append
+        // conflicts; mergeParquet makes the same whole-table choice).
+        // Matched-only merges keep the narrow file scope: an unseen
+        // appended row is merely not-updated — merge-before-append
+        // serialization, the same WriteSerializable contract as
+        // deleteWhere.
         val (scopeFn, expect): (String => Boolean, Set[String]) =
           if (insert.nonEmpty) ((_: String) => true, preLive.toSet)
           else (touchedSet, touchedSet)
@@ -1678,24 +1608,10 @@ object Upsert {
         "__graft_file, and the __src_/__mk_/__ex_ prefixes)")
   }
 
-  /** Generalized merge against an EMPTY snapshot — a freshly
-    * CREATE TABLE'd shell, or a table whose rows were all deleted
-    * (ADVICE r14, medium: [[Manifest.readAsOf]] rightly refuses an
-    * empty file list, so the main path can't run). No target row can
-    * match, so matched-only merges are a (0, 0) no-op and an INSERT
-    * clause treats EVERY source row as unmatched: apply the insert
-    * condition over the same `__src_`-renamed frame the caller wrote it
-    * against, project the target shape, and land through an
-    * expected-empty whole-table optimistic commit (the
-    * [[appendIntoEmptyChecked]] shape) — a racing lease-less append
-    * makes the live set non-empty, the commit conflicts, and
-    * [[retryingConflicts]] re-runs the merge against the now-non-empty
-    * table.
-    */
-  /** Clause validation shared by the live and empty-shell merge paths
-    * — the same merge program must fail the same way empty or
-    * non-empty (a typo'd SET column silently no-opping until the
-    * table's first insert is a debugging trap).
+  /** Clause validation shared by the copy-on-write and merge-on-read
+    * merge bodies — it runs whether or not the table holds a row, so a
+    * typo'd SET column refuses on an empty table too instead of
+    * silently no-opping until the table's first insert.
     */
   private def validateMergeClauses(path: String, targetCols: Seq[String],
       srcCols: Set[String], keys: Seq[String],
@@ -1768,44 +1684,6 @@ object Upsert {
             .map(_.cast(targetSchema(c).dataType).as(c))
             .getOrElse(lit(null).cast(targetSchema(c).dataType).as(c))
         }: _*)
-    }
-  }
-
-  private def mergeIntoEmptyShell(spark: SparkSession, path: String,
-      version: Long, source: DataFrame, keys: Seq[String],
-      matched: Seq[MatchedAction], bySource: Seq[BySourceAction],
-      insert: Option[InsertSpec],
-      partitionCols: Seq[String]): (Long, Long) = {
-    val pinned = Manifest.schemaAsOf(spark, path, version)
-    // a shell always pins its CREATE TABLE schema; a fully-deleted
-    // un-pinned table takes its shape back from the source (the same
-    // incoming-defines-shape rule stagedAppend applies to new tables)
-    val targetCols = pinned.map(_.fieldNames.toSeq)
-      .getOrElse(source.columns.toSeq)
-    requireNoReservedNames(path, targetCols, keys)
-    // the MAIN path's clause validations run here too, even though no
-    // matched/by-source clause can fire (review finding, round 15)
-    validateMergeClauses(path, targetCols, source.columns.toSet, keys,
-      matched, bySource, insert)
-    insert match {
-    case None => (0L, 0L)
-    case Some(spec) =>
-      val renamed = renamedSource(source, keys)
-      val filtered = spec.cond.fold(renamed)(c => renamed.filter(c))
-      val pinnedSchema = pinned.getOrElse(
-        org.apache.spark.sql.types.StructType(
-          targetCols.map(c => source.schema(c))))
-      val out = insertProjection(filtered, spec, keys, targetCols,
-        pinnedSchema)
-      pinned.foreach(st => requireSameShape(out.schema, st, path))
-      val n = out.count()
-      if (n == 0L) (0L, 0L)
-      else withStaged(spark, path, out, partitionCols, "merge") { moved =>
-        Manifest.commitOptimistic(spark, path, Manifest.PreparedCommit(
-          scope = _ => true, expected = Set.empty,
-          retire = Set.empty, add = moved))
-        (0L, n)
-      }
     }
   }
 }

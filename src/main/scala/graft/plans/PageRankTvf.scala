@@ -113,7 +113,11 @@ case class ExpandPageRank(spark: SparkSession)
         // executes inside the analysis rule — the same
         // eager-work-at-build-time regime as the LabelPropagation
         // fixpoint loops, re-run (and re-timed) on every execution of
-        // the enclosing query. Below the measured K crossover
+        // the enclosing query. So ANY analysis of a query holding the
+        // TVF, EXPLAIN included, runs an |E|-sized Spark job, and
+        // nothing releases its blocks (no Checkpoints.release); they
+        // stay until the plan is collected and the ContextCleaner
+        // frees them. Below the measured K crossover
         // (GraphQueries.MaterializeRelationRounds) the fixed
         // materialization cost exceeds the replan savings, so short
         // chains keep round 18's reusable-exchange form.

@@ -102,7 +102,12 @@ case class ExpandPpr(spark: SparkSession) extends Rule[LogicalPlan] {
         // crossover, GraphQueries.MaterializeRelationRounds) checkpoint
         // the weighted relation instead — leaf scans beat per-level
         // AQE replans through the subtree once K amortizes the eager
-        // materialization (see GraphQueries.relaxRounds).
+        // materialization (see GraphQueries.relaxRounds). The
+        // checkpoint runs inside this analysis rule, so ANY analysis of
+        // a query holding the TVF, EXPLAIN included, runs an |E|-sized
+        // Spark job, and nothing releases its blocks (no
+        // Checkpoints.release); they stay until the plan is collected
+        // and the ContextCleaner frees them.
         val wRep = w.repartition(col("src"))
         val wShared =
           if (p.iters >= graft.queries.GraphQueries.MaterializeRelationRounds)

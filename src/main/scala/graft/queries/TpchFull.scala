@@ -442,16 +442,19 @@ object TpchFull {
       // fact rows through the first exchange, plus the gid machinery).
       // Grouping by (order, supplier) first — with bool_or carrying the
       // "has a flagged line" bit — then counting per order is
-      // value-identical (count(po_sk) skips nulls exactly as
-      // countDistinct did) and shuffles the fact once at its natural
-      // (order, supplier) grain with no row multiplication.
+      // value-identical to the two countDistincts, and shuffles the
+      // fact once at its natural (order, supplier) grain with no row
+      // multiplication. Both counts skip the NULL-supplier group, as
+      // countDistinct skips NULL: count(po_sk) by itself, n_supp_r by
+      // its po_sk guard.
       val perOrder = li
         .groupBy(col("l_orderkey").as("po_ok"), col("l_suppkey").as("po_sk"))
         .agg(max(col("l_returnflag") === "R").as("has_r"))
         .groupBy(col("po_ok"))
         .agg(
           count(col("po_sk")).as("n_supp"),
-          sum(when(col("has_r"), 1L).otherwise(0L)).as("n_supp_r"))
+          sum(when(col("has_r") && col("po_sk").isNotNull, 1L)
+            .otherwise(0L)).as("n_supp_r"))
       li.filter(col("l_returnflag") === "R")
         .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F")
           .select(col("o_orderkey")),

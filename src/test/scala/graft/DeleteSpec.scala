@@ -87,6 +87,23 @@ class DeleteSpec extends AnyFunSuite {
     }
   }
 
+  test("updateWhere's errors name updateWhere, not deleteWhere") {
+    val p = tmp()
+    Upsert.append(spark, p,
+      Seq((1, 100L, "x")).toDF("k", "cents", "__graft_input_file"), None)
+    val keyDf = Seq(1).toDF("__graft_k")
+      .withColumn("__graft_m1", org.apache.spark.sql.functions.lit(true))
+    val prepared = Upsert.PreparedPredicate(
+      joins = Seq(Upsert.MembershipJoin(keyDf,
+        col("k") === col("__graft_k"), "__graft_m1")),
+      predicate = col("__graft_m1") <=>
+        org.apache.spark.sql.functions.lit(true))
+    val e = intercept[IllegalArgumentException](Upsert.updateWhere(spark,
+      p, prepared, Map("cents" -> org.apache.spark.sql.functions.lit(0L))))
+    assert(e.getMessage.startsWith(s"requirement failed: updateWhere into $p"),
+      e.getMessage)
+  }
+
   test("a predicate with no matches is a version no-op") {
     val p = tmp(); seed(p)
     val v = Manifest.currentVersion(spark, p).get

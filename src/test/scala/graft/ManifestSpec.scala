@@ -165,4 +165,37 @@ class ManifestSpec extends AnyFunSuite {
     assert(Manifest.read(spark, path).count() === 2L)
     assert(content(path) === Set(1 -> 100, 2 -> 200))
   }
+
+  test("a fully deleted library table keeps its schema: readable, " +
+      "change-fed and mergeable; a schema-less empty version fails loudly") {
+    val path = tmp()
+    Upsert.upsertPartitioned(spark, path,
+      df((1, d1, "US", 100), (2, d2, "US", 200)), keys, "source_date")
+    val v1 = Manifest.currentVersion(spark, path).get
+    assert(Manifest.schemaAsOf(spark, path, v1).isEmpty,
+      "fixture sanity: a library-created table pins no schema")
+    val schema = Manifest.read(spark, path).schema
+    assert(Upsert.deleteWhere(spark, path, lit(true)) === 2L)
+    val v2 = Manifest.currentVersion(spark, path).get
+    assert(Manifest.filesAsOf(spark, path, v2).isEmpty)
+    assert(Manifest.schemaAsOf(spark, path, v2) === Some(schema))
+    assert(schema("source_date").dataType ===
+      org.apache.spark.sql.types.DateType)
+    assert(Manifest.read(spark, path).count() === 0L)
+    assert(graft.engine.ChangeFeed.changes(spark, path, v1, v2, keys)
+      .select("rank", graft.engine.ChangeFeed.ChangeCol)
+      .as[(Int, String)].collect().toSet ===
+      Set((1, "delete"), (2, "delete")))
+    val (affected, inserted) = Upsert.mergeActions(spark, path,
+      df((3, d1, "US", 300)), keys, Seq(Upsert.MatchedUpdate(None)),
+      Some(None), Seq("source_date"))
+    assert(affected === 0L && inserted === 1L)
+    assert(content(path) === Set(3 -> 300))
+    // a zero-file version committed with no schema has no shape to read
+    val fresh = tmp()
+    Manifest.commit(spark, fresh, Nil)
+    val e = intercept[IllegalStateException](Manifest.read(spark, fresh))
+    assert(e.getMessage.contains(
+      "Manifest.commit(spark, path, Nil, schema = Some("), e.getMessage)
+  }
 }

@@ -8,15 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{CommitConflictException, Manifest, Upsert}
 
-/** The merge verbs' SHELL PATH (insert into a freshly CREATE TABLE'd
-  * empty table) is conflict-scoped since round 14 (ADVICE r13): the old
-  * blind stagedAppend fallback had a window between the shell check and
-  * the commit where a concurrent lease-less append could land rows
-  * sharing keys with the merge's batch — silently violating the
-  * unique-key contract. Now the shell insert commits via
-  * `commitOptimistic(scope = whole table, expected = ∅)`, so any such
-  * append conflicts and the merge's retry loop re-runs the shell check
-  * against the now-non-empty table (full merge path, keys deduped).
+/** Merges into an EMPTY table — a freshly CREATE TABLE'd one, whose
+  * manifest version lists no files. An empty table reads as zero rows
+  * of its pinned schema, so the merge verbs run their one body over
+  * it: with nothing live, the commit is
+  * `commitOptimistic(scope = whole table, expected = ∅)` when
+  * unpartitioned, and expects no files in the touched date directories
+  * when partitioned. A concurrent lease-less append that lands rows
+  * sharing keys with the merge's batch therefore makes the commit
+  * conflict, and the merge's retry loop merges against the now
+  * non-empty table (keys deduped) instead of admitting a second copy.
   */
 class MergeShellSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

@@ -333,4 +333,25 @@ class UpsertSpec extends AnyFunSuite {
       .select("k", "v").as[(Int, String)].collect().toSet ===
       Set((1, "a2"), (3, "c")))
   }
+
+  test("an overwrite that empties a table's only partition reads as an " +
+      "empty table, and the next upsert lands") {
+    val path = tmp()
+    val day = Seq((1, d1, "US")).toDF("rank", "source_date", "country")
+    Upsert.upsertPartitioned(spark, path, day, odsKeys, "source_date")
+    val schema = graft.engine.Manifest.read(spark, path).schema
+    assert(Upsert.overwritePartitions(spark, path, day.limit(0),
+      "source_date", expectedValues = Some(Seq(d1.toString))) === 0)
+    val v = graft.engine.Manifest.currentVersion(spark, path).get
+    assert(graft.engine.Manifest.filesAsOf(spark, path, v).isEmpty)
+    val empty = graft.engine.Manifest.read(spark, path)
+    assert(empty.count() === 0)
+    assert(empty.schema.map(f => f.name -> f.dataType) ===
+      schema.map(f => f.name -> f.dataType))
+    assert(Upsert.upsertPartitioned(spark, path, day, odsKeys,
+      "source_date") === 1)
+    assert(graft.engine.Manifest.read(spark, path)
+      .select("rank", "source_date", "country")
+      .as[(Int, Date, String)].collect().toSeq === Seq((1, d1, "US")))
+  }
 }
