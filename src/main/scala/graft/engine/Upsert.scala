@@ -34,7 +34,9 @@ import org.apache.spark.sql.functions.col
   * manifest version lists no files and [[Manifest.readAsOf]] reads it
   * as zero rows of its schema. Every verb here runs its one body over
   * it; the only special case is a path with no version at all, whose
-  * first write defines the table.
+  * first write defines the table. A zero-file version that pins no
+  * schema has no shape, so every verb here fails on it loudly, through
+  * [[Manifest.readAsOf]], with the one-line repair in the message.
   */
 object Upsert {
 
@@ -1271,11 +1273,9 @@ object Upsert {
         // By-source clauses stay copy-on-write: they act on rows the
         // source does NOT name, so the rewrite is whole-table either
         // way and the COW path's single staged rewrite is the better
-        // plan. Matched-free programs (insert-only) and an empty
-        // table have nothing to DV.
+        // plan. Matched-free programs (insert-only) have nothing to DV.
         val mor = matched.nonEmpty && bySource.isEmpty &&
-          dmlMode(spark, path) == "merge-on-read" &&
-          Manifest.currentLive(spark, path).nonEmpty
+          dmlMode(spark, path) == "merge-on-read"
         if (mor)
           mergeActionsOnceMor(spark, path, source, keys, matched,
             insert, partitionCols)
@@ -1372,7 +1372,8 @@ object Upsert {
           keys.map(k => renamed(k) <=> exKeys(s"__ex_$k")).reduce(_ && _),
           "left_anti")
         val filtered = spec.cond.fold(against)(c => against.filter(c))
-        insertProjection(filtered, spec, keys, targetCols, targetSchema)
+        insertProjection(path, filtered, spec, keys, targetCols,
+          targetSchema)
       }
       val nInserted = insertRows.fold(0L)(_.count())
       // rows appended beside the DVs: updated copies, then inserts
@@ -1556,7 +1557,8 @@ object Upsert {
             "left_anti")
         }
       val filtered = spec.cond.fold(against)(c => against.filter(c))
-      insertProjection(filtered, spec, keys, targetCols, table.schema)
+      insertProjection(path, filtered, spec, keys, targetCols,
+        table.schema)
     }
     val nInserted = insertRows.fold(0L)(_.count())
 
@@ -1666,20 +1668,33 @@ object Upsert {
     * `INSERT *` takes the full source row by name; column-level INSERT
     * takes the source's key values (identity — enforced at analysis,
     * see [[InsertSpec]]), the assigned expressions (assignment-cast to
-    * the target type), and NULL for every unassigned column.
+    * the target type), and NULL for every unassigned column. A column
+    * taken from the source keeps the table's type: an up-cast (INT into
+    * BIGINT) is applied, any other retyping is refused as schema drift
+    * — a file of another type under the table's schema would break its
+    * later reads (the same fixed-schema contract as
+    * [[requireSameColumns]]).
     */
-  private def insertProjection(src: DataFrame, spec: InsertSpec,
-      keys: Seq[String], targetCols: Seq[String],
+  private def insertProjection(path: String, src: DataFrame,
+      spec: InsertSpec, keys: Seq[String], targetCols: Seq[String],
       targetSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
     import org.apache.spark.sql.functions.lit
+    def fromSource(name: String, c: String) = {
+      val (in, ex) = (src.schema(name).dataType, targetSchema(c).dataType)
+      require(in == ex || Cast.canUpCast(in, ex),
+        s"schema drift on merge into $path: column types differ — " +
+          s"$c: ${in.simpleString} vs table ${ex.simpleString}")
+      (if (in == ex) col(name) else col(name).cast(ex)).as(c)
+    }
     spec.set match {
       case None =>
         src.select(targetCols.map { c =>
-          (if (keys.contains(c)) col(c) else col(s"__src_$c")).as(c)
+          fromSource(if (keys.contains(c)) c else s"__src_$c", c)
         }: _*)
       case Some(as) =>
         src.select(targetCols.map { c =>
-          if (keys.contains(c)) col(c).as(c)
+          if (keys.contains(c)) fromSource(c, c)
           else as.collectFirst { case (`c`, v) => v }
             .map(_.cast(targetSchema(c).dataType).as(c))
             .getOrElse(lit(null).cast(targetSchema(c).dataType).as(c))

@@ -270,6 +270,28 @@ class DeletionVectorSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.dml.mode")
   }
 
+  test("MoR MERGE into a CREATE TABLE shell inserts through the same body") {
+    val p = tmp()
+    Manifest.commit(spark, p, Nil, schema = Some(
+      Seq((0, d1, 0L)).toDF("k", "d", "cents").schema))
+    spark.conf.set("spark.graft.dml.mode", "merge-on-read")
+    try {
+      val program = (src: org.apache.spark.sql.DataFrame) =>
+        Upsert.mergeProgram(spark, p, src, Seq("k"),
+          Seq(Upsert.MatchedUpdate(None)), Seq.empty,
+          Some(Upsert.InsertSpec(None)), Seq("d"))
+      assert(program(Seq((1, d1, 100L), (2, d2, 200L))
+        .toDF("k", "d", "cents")) === (0L, 2L))
+      assert(Manifest.livePartitions(spark, p) ===
+        Seq("d=2024-07-01", "d=2024-07-02"))
+      // the table is non-empty now: the matched clause DVs the old image
+      assert(program(Seq((2, d2, 222L)).toDF("k", "d", "cents")) === (1L, 0L))
+      assert(dvsNow(p).size === 1)
+      assert(Manifest.read(spark, p).select("k", "cents").as[(Int, Long)]
+        .collect().toSet === Set(1 -> 100L, 2 -> 222L))
+    } finally spark.conf.unset("spark.graft.dml.mode")
+  }
+
   test("MoR MERGE matched-only keeps narrow scope; COW by-source untouched") {
     val p = tmp(); seed(p)
     spark.conf.set("spark.graft.dml.mode", "merge-on-read")

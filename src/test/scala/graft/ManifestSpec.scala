@@ -198,4 +198,27 @@ class ManifestSpec extends AnyFunSuite {
     assert(e.getMessage.contains(
       "Manifest.commit(spark, path, Nil, schema = Some("), e.getMessage)
   }
+
+  test("writes into a schema-less zero-file version fail loudly, naming " +
+      "the repair; after it the table takes writes") {
+    // such a version is what a full delete or an emptying overwrite of
+    // an unpinned table committed before zero-file commits pinned a schema
+    val path = tmp()
+    Manifest.commit(spark, path, Nil)
+    val repair = "Manifest.commit(spark, path, Nil, schema = Some("
+    val batch = df((1, d1, "US", 100))
+    val writes: Seq[(String, () => Any)] = Seq(
+      "append" -> (() => Upsert.append(spark, path, batch, Some("source_date"))),
+      "upsert" -> (() => Upsert.upsertPartitioned(spark, path, batch, keys,
+        "source_date")),
+      "merge" -> (() => Upsert.mergeActions(spark, path, batch, keys,
+        Seq(Upsert.MatchedUpdate(None)), Some(None), Seq("source_date"))))
+    writes.foreach { case (verb, write) =>
+      val e = intercept[IllegalStateException](write())
+      assert(e.getMessage.contains(repair), s"$verb: ${e.getMessage}")
+    }
+    Manifest.commit(spark, path, Nil, schema = Some(batch.schema))
+    Upsert.append(spark, path, batch, Some("source_date"))
+    assert(content(path) === Set(1 -> 100))
+  }
 }

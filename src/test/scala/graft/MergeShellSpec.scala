@@ -119,4 +119,27 @@ class MergeShellSpec extends AnyFunSuite {
       .filter(org.apache.spark.sql.functions.col("count") > 1)
       .count() === 0, "non-raced keys must be unique")
   }
+
+  test("INSERT * keeps the table's column types: an up-cast lands cast, " +
+      "any other retyping is refused as schema drift") {
+    val p = shell()
+    val insertOnly = (src: org.apache.spark.sql.DataFrame) =>
+      Upsert.mergeActions(spark, p, src, Seq("k"), Seq.empty, Some(None),
+        Seq.empty)
+    val e = intercept[IllegalArgumentException](
+      insertOnly(Seq((1, d1, "100")).toDF("k", "d", "cents")))
+    assert(e.getMessage.contains("schema drift") &&
+      e.getMessage.contains("cents: string vs table bigint"), e.getMessage)
+    assert(Manifest.read(spark, p).count() === 0L)
+    // INT into BIGINT, into the empty table and into the non-empty one:
+    // every committed file stores BIGINT
+    assert(insertOnly(Seq((1, d1, 100)).toDF("k", "d", "cents")) === (0L, 1L))
+    assert(insertOnly(Seq((2, d1, 200)).toDF("k", "d", "cents")) === (0L, 1L))
+    val files = Manifest.currentLive(spark, p)
+    assert(files.nonEmpty)
+    files.foreach(f => assert(spark.read.parquet(s"$p/$f").schema("cents")
+      .dataType === LongType, f))
+    assert(Manifest.read(spark, p).select("k", "cents").as[(Int, Long)]
+      .collect().toSet === Set(1 -> 100L, 2 -> 200L))
+  }
 }
