@@ -24,6 +24,13 @@ import graft.star.StarBuilder
   * through one manifest commit, so readers never see a half-written
   * table. The checked ingest's quarantine is the one side output
   * outside the manifest: a plain per-day parquet overwrite.
+  *
+  * A day is a small batch, so its fixed Spark work decides its cost:
+  * the day's imputed slice is materialized once
+  * ([[engine.Checkpoints.withIter]]) and feeds the three dims and the
+  * fact; a dim's id base comes from parquet footers, and its new keys
+  * are numbered in one pass on the driver; the two artist marts share
+  * one materialized aggregate, and no mart sorts what it writes.
   */
 object Pipeline {
 
@@ -74,39 +81,42 @@ object Pipeline {
     Upsert.upsertPartitioned(spark, odsPath(warehouse), day, OdsKeys, "source_date")
 
     // 2. the day's warehouse rows (post-dedup) → imputation (per-date, so
-    //    day-local equals global)
-    val filled = StarBuilder.imputePerDate(
-      graft.engine.Manifest.read(spark, odsPath(warehouse))
-        .filter(col("source_date") === lit(date).cast("date")))
+    //    day-local equals global), materialized once: the three dims and
+    //    the fact all read this one slice
+    engine.Checkpoints.withIter(StarBuilder.imputePerDate(
+        graft.engine.Manifest.read(spark, odsPath(warehouse))
+          .filter(col("source_date") === lit(date).cast("date")))) { filled =>
+      // 3. dims: append-only with stable ids
+      val dimArtist = upsertDim(spark, dimArtistPath(warehouse),
+        filled.select(col("artist_name")), "artist_id", Seq("artist_name"))
+      val dimCountry = upsertDim(spark, dimCountryPath(warehouse),
+        filled.select(col("country").as("country_name")),
+        "country_id", Seq("country_name"))
+      val dimSong = upsertDim(spark, dimSongPath(warehouse),
+        filled.select(col("song_name"), col("duration_filled").as("duration_sec")),
+        "song_id", Seq("song_name", "duration_sec"))
 
-    // 3. dims: append-only with stable ids
-    val dimArtist = upsertDim(spark, dimArtistPath(warehouse),
-      filled.select(col("artist_name")), "artist_id", Seq("artist_name"))
-    val dimCountry = upsertDim(spark, dimCountryPath(warehouse),
-      filled.select(col("country").as("country_name")),
-      "country_id", Seq("country_name"))
-    val dimSong = upsertDim(spark, dimSongPath(warehouse),
-      filled.select(col("song_name"), col("duration_filled").as("duration_sec")),
-      "song_id", Seq("song_name", "duration_sec"))
+      // 4. fact for the date, keyed (date, country_id, song_rank)
+      val fact = StarBuilder.fact(filled, dimArtist, dimSong, dimCountry)
+      Upsert.upsertPartitioned(spark, factPath(warehouse), fact,
+        Seq("date", "country_id", "song_rank"), "date")
 
-    // 4. fact for the date, keyed (date, country_id, song_rank)
-    val fact = StarBuilder.fact(filled, dimArtist, dimSong, dimCountry)
-    Upsert.upsertPartitioned(spark, factPath(warehouse), fact,
-      Seq("date", "country_id", "song_rank"), "date")
-
-    // 5. marts for the date (idempotent per-date refresh — fixes the
-    //    reference's duplicate-on-rerun DM inserts, SURVEY §7.4.5)
-    val dayFact = graft.engine.Manifest.read(spark, factPath(warehouse))
-      .filter(col("date") === lit(date).cast("date"))
-    Upsert.upsertPartitioned(spark, martAvgPath(warehouse),
-      Marts.avgSongDurationByCountry(dayFact, dimSong, dimCountry),
-      Seq("date", "country_name"), "date")
-    Upsert.upsertPartitioned(spark, martAppearancesPath(warehouse),
-      Marts.artistAppearancesByDate(dayFact, dimArtist),
-      Seq("date", "artist_name"), "date")
-    Upsert.upsertPartitioned(spark, martRoyaltiesPath(warehouse),
-      Marts.expectedArtistRoyaltiesByDate(dayFact, dimArtist),
-      Seq("date", "artist_name"), "date")
+      // 5. marts for the date (idempotent per-date refresh — fixes the
+      //    reference's duplicate-on-rerun DM inserts, SURVEY §7.4.5); the
+      //    two artist marts project one materialized aggregate
+      val dayFact = graft.engine.Manifest.read(spark, factPath(warehouse))
+        .filter(col("date") === lit(date).cast("date"))
+      Upsert.upsertPartitioned(spark, martAvgPath(warehouse),
+        Marts.avgSongDurationByCountry(dayFact, dimSong, dimCountry),
+        Seq("date", "country_name"), "date")
+      engine.Checkpoints.withIter(
+          Marts.artistDayTotals(dayFact, dimArtist)) { totals =>
+        Upsert.upsertPartitioned(spark, martAppearancesPath(warehouse),
+          Marts.appearancesOf(totals), Seq("date", "artist_name"), "date")
+        Upsert.upsertPartitioned(spark, martRoyaltiesPath(warehouse),
+          Marts.royaltiesOf(totals), Seq("date", "artist_name"), "date")
+      }
+    }
 
     // 6. one atomic publication pinning the day's consistent star
     //    (ODS + dims + fact + marts): a reader resolving the
@@ -229,30 +239,41 @@ object Pipeline {
   /** Append the dim's unseen keys ([[StarBuilder.newDimRows]]) as one
     * snapshot commit and return the dim after it — `INSERT … ON
     * CONFLICT DO NOTHING` into a `serial` table. Existing rows and
-    * their files stay as they are; a day with no new keys commits
-    * nothing. The append stages the new rows outside the table before
-    * moving them in, so its plan reads the snapshot it extends, and a
-    * crash before the commit leaves only unreferenced files behind
-    * (replay-safe; `Manifest.vacuum` collects them). The writer lease
-    * keeps the id base (max existing id) and the append one step.
+    * their files stay as they are; a day with no new keys runs no write
+    * job and commits nothing. The new keys are numbered on the driver
+    * and written as one file. The append stages them outside the table
+    * before moving them in, so a crash before the commit leaves only
+    * unreferenced files behind (replay-safe; `Manifest.vacuum` collects
+    * them). The writer lease keeps the id base and the append one step.
+    *
+    * The id base is max(id) over the live rows. It is read from the
+    * live files' parquet footers with no Spark job
+    * ([[engine.FileStats.liveMax]]) under its precondition: every live
+    * file carries the id column's statistic and the version binds no
+    * deletion vector (a deleted row's id would otherwise raise the
+    * base). When that fails, a scan of the dim finds it.
     */
   private def upsertDim(spark: SparkSession, path: String,
       candidates: DataFrame, idCol: String, keys: Seq[String]): DataFrame =
       graft.engine.WriterLease.withLease(spark, path) {
-    val existing = readOrEmpty(spark, path, candidates, idCol, keys)
-    Upsert.append(spark, path,
-      StarBuilder.newDimRows(existing, candidates, idCol, keys), None)
-    readOrEmpty(spark, path, candidates, idCol, keys)
+    val v = graft.engine.Manifest.currentVersion(spark, path)
+    val existing = readOrEmpty(spark, path, v, candidates, idCol, keys)
+    val base = v.fold(0L) { cur =>
+      engine.FileStats.liveMax(spark, path, cur, idCol)
+        .getOrElse(StarBuilder.maxId(existing, idCol))
+    }
+    val added = StarBuilder.newDimRows(existing, candidates, idCol, keys, base)
+    if (!added.isEmpty) Upsert.append(spark, path, added.coalesce(1), None)
+    readOrEmpty(spark, path, graft.engine.Manifest.currentVersion(spark, path),
+      candidates, idCol, keys)
   }
 
-  /** The dim's current snapshot, or an empty dim when it has no
-    * committed version yet (orphans of a crashed first write included).
+  /** The dim at version `v`, or an empty dim when it has no committed
+    * version yet (orphans of a crashed first write included).
     */
-  private def readOrEmpty(spark: SparkSession, path: String,
+  private def readOrEmpty(spark: SparkSession, path: String, v: Option[Long],
       candidates: DataFrame, idCol: String, keys: Seq[String]): DataFrame =
-    if (graft.engine.Manifest.currentVersion(spark, path).isDefined)
-      graft.engine.Manifest.read(spark, path)
-    else {
+    v.map(graft.engine.Manifest.readAsOf(spark, path, _)).getOrElse {
       val keySchema = StructType(candidates.select(keys.map(col): _*).schema
         .fields.map(_.copy(nullable = true)))
       val schema = StructType(

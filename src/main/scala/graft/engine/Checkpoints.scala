@@ -32,15 +32,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   * would re-execute the round's plan per reference, which is the
   * 2^K-plan-blowup this seam exists to prevent.
   *
-  * Not every materialization goes through this seam yet. Seven sites
+  * Not every materialization goes through this seam yet. Six sites
   * call `localCheckpoint` directly and so ignore `graft.iter.checkpoint`
   * today: their blocks stay executor-local even under `reliable`. They
   * are `GraphQueries.relaxRounds`' loop relation, the `ExpandPageRank`
   * and `ExpandPpr` TVF rules' weighted relation, `DocQueries`'
-  * span-dedup `occ` and lm-surprisal transition table `tr`,
-  * `OdsBuilder.ingestChecked`'s raw day and `Multimodal`'s shared
-  * decode. Routing them through [[iter]] is ROADMAP.md direction 3,
-  * "Materialize at execution time, through one seam".
+  * span-dedup `occ` and lm-surprisal transition table `tr`, and
+  * `Multimodal`'s shared decode. Routing them through [[iter]] is
+  * ROADMAP.md direction 3, "Materialize at execution time, through one
+  * seam".
   */
 object Checkpoints {
 
@@ -62,6 +62,14 @@ object Checkpoints {
       case other => throw new IllegalArgumentException(
         s"$ConfKey must be 'local' or 'reliable', got '$other'")
     }
+  }
+
+  /** `body` over `df` materialized by [[iter]]; the blocks are
+    * [[release]]d when `body` returns or throws.
+    */
+  def withIter[A](df: DataFrame)(body: DataFrame => A): A = {
+    val m = iter(df)
+    try body(m) finally release(m)
   }
 
   /** Release the storage behind a frame returned by [[iter]] (or by

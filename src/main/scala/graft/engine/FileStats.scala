@@ -76,6 +76,30 @@ object FileStats {
     }.collect().toMap.filter(_._2.nonEmpty)
   }
 
+  /** `max(c)` over the rows live at version `v` of the manifest table at
+    * `tablePath`, for an integer column `c`, read from the live files'
+    * parquet footers on the driver: one footer read per file, no Spark
+    * job. None whenever the footers cannot prove that maximum:
+    *  - a live file carries no min/max statistic for `c` (a file with no
+    *    row group, or one written without statistics), or the version
+    *    lists no file;
+    *  - the version binds a deletion vector: a deleted row's value
+    *    still sits in its file's footer, so the footer maximum can
+    *    exceed the live one.
+    * Callers fall back to a scan of the version then.
+    */
+  def liveMax(spark: SparkSession, tablePath: String, v: Long,
+      c: String): Option[Long] = {
+    val files = Manifest.filesAsOf(spark, tablePath, v)
+    if (files.isEmpty || Manifest.dvsAsOf(spark, tablePath, v).nonEmpty)
+      return None
+    val conf = spark.sparkContext.hadoopConfiguration
+    val maxima = files.map(f =>
+      footerStats(conf, s"$tablePath/$f", Set(c)).get(c)
+        .collect { case Stat("long", _, mx) => mx.toLong })
+    if (maxima.exists(_.isEmpty)) None else Some(maxima.flatten.max)
+  }
+
   /** Footer-only stats of one parquet file. Package-visible for specs. */
   private[engine] def footerStats(conf: Configuration, file: String,
       cols: Set[String]): Map[String, Stat] = {

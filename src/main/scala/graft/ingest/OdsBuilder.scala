@@ -150,28 +150,32 @@ object OdsBuilder {
     * country-day with an empty quarantine, defeating its monitoring
     * purpose.
     *
-    * The raw day is materialized ONCE via an eager `localCheckpoint`
-    * (one scan for the good/bad split): Spark rejects raw-JSON-scan
-    * plans whose only referenced column is the internal corrupt record
+    * The raw day is materialized ONCE through
+    * [[graft.engine.Checkpoints.iter]] (one scan for the good/bad split;
+    * `graft.iter.checkpoint` picks executor-local or reliable storage):
+    * Spark rejects raw-JSON-scan plans whose only referenced column is
+    * the internal corrupt record
     * (QUERY_ONLY_CORRUPT_RECORD_COLUMN — and Catalyst's isNotNull
     * constraint propagation folds away any decoy data-column reference),
     * so the quarantine side cannot run against the file scan directly.
     * Unlike `cache()`, the checkpoint is per-call (a later call with new
     * files landed never plan-matches a stale entry) and its blocks are
     * released by the ContextCleaner when the frames are collected —
-    * no session-lifetime leak. `src_file` is derived inside the scan
+    * no session-lifetime leak (a reliable checkpoint's files stay in
+    * the checkpoint directory, as for every [[graft.engine.Checkpoints]]
+    * caller). `src_file` is derived inside the scan
     * projection — input_file_name() is a property of the file scan and
     * would be '' after materialization.
     */
   def ingestChecked(spark: SparkSession, root: String = fixtureRoot,
       glob: String = "*/*.json"): CheckedIngest = {
-    val raw = spark.read.option("multiLine", value = true)
+    val scan = spark.read.option("multiLine", value = true)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(rawSchemaWithCorrupt)
       .json(jsonInputs(spark, root, glob): _*)
       .withColumn("src_file", url_decode(input_file_name()))
-      .localCheckpoint()
+    val raw = graft.engine.Checkpoints.iter(scan)
 
     val fileQuarantine = raw.filter(col("_corrupt_record").isNotNull)
       .select(col("src_file"), lit("malformed_json").as("reason"),

@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions._
   * Numeric discipline: PG computes these in `numeric`; we compute in exact
   * integer math and convert to DOUBLE only at the end, so results
   * hash-match a decimal oracle bit-for-bit (SURVEY.md §7.4.3).
+  *
+  * No mart sorts its output: a parquet table keeps no row order, and
+  * every consumer (the oracle diff, the daily gate) compares rows as a
+  * set. The two artist marts group the same `fact ⋈ dim_artist` by
+  * (date, artist_name), so both are projections of one aggregate
+  * ([[artistDayTotals]]), which the daily pipeline materializes once.
   */
 object Marts {
 
@@ -26,7 +32,6 @@ object Marts {
       .groupBy(col("date"), col("country_name"))
       .agg((sum(col("duration_sec")).cast("double") /
         count(col("duration_sec"))).as("avg_duration_sec"))
-      .orderBy(col("date"), col("country_name"))
 
   /** `dm.artist_appearances_by_date` (A6 + J3,
     * `from_dds_to_dm_pg.py:57-66`): COUNT(*) per (date, artist_name).
@@ -35,19 +40,35 @@ object Marts {
     fact.join(dimArtist, Seq("artist_id"))
       .groupBy(col("date"), col("artist_name"))
       .agg(count(lit(1)).as("cnt_appearance"))
-      .orderBy(col("date"), col("artist_name"))
 
   /** `dm.expected_artist_royalties_by_date` (A7 + J4 + W2,
     * `from_dds_to_dm_pg.py:70-81`): ROUND(SUM(listeners_count) * 0.003, 2).
-    * 0.003/listen per `ddl_dm.sql:17`. Exact route: thousandths = sum*3,
-    * cents = round-half-up(thousandths/10) = (sum*3+5) div 10, then /100
-    * as double — reproduces PG numeric ROUND half-away-from-zero exactly.
     */
   def expectedArtistRoyaltiesByDate(fact: DataFrame, dimArtist: DataFrame): DataFrame =
+    royaltiesOf(artistDayTotals(fact, dimArtist))
+
+  /** Both artist marts' one aggregate: per (date, artist_name) of
+    * `fact ⋈ dim_artist`, `cnt_appearance` = COUNT(*) and `listeners` =
+    * SUM(listeners_count).
+    */
+  def artistDayTotals(fact: DataFrame, dimArtist: DataFrame): DataFrame =
     fact.join(dimArtist, Seq("artist_id"))
       .groupBy(col("date"), col("artist_name"))
-      .agg((call_function("div",
-        sum(col("listeners_count")) * 3 + 5, lit(10L))
+      .agg(count(lit(1)).as("cnt_appearance"),
+        sum(col("listeners_count")).as("listeners"))
+
+  /** [[artistAppearancesByDate]] projected from [[artistDayTotals]]. */
+  def appearancesOf(totals: DataFrame): DataFrame =
+    totals.select(col("date"), col("artist_name"), col("cnt_appearance"))
+
+  /** [[expectedArtistRoyaltiesByDate]] projected from
+    * [[artistDayTotals]]. 0.003/listen per `ddl_dm.sql:17`. Exact route:
+    * thousandths = sum*3, cents = round-half-up(thousandths/10) =
+    * (sum*3+5) div 10, then /100 as double — reproduces PG numeric ROUND
+    * half-away-from-zero exactly.
+    */
+  def royaltiesOf(totals: DataFrame): DataFrame =
+    totals.select(col("date"), col("artist_name"),
+      (call_function("div", col("listeners") * 3 + 5, lit(10L))
         .cast("double") / 100).as("royalties"))
-      .orderBy(col("date"), col("royalties").desc, col("artist_name"))
 }

@@ -225,10 +225,11 @@ object Multimodal {
                 .take(200))))
         }
       }
-      // one decode feeds both sides (ingestChecked's localCheckpoint
-      // idiom, OdsBuilder.scala:150) — without it each consumer would
-      // re-run the full raster decode; ContextCleaner frees the blocks
-      // when the frames go unreferenced
+      // one decode feeds both sides (an eager localCheckpoint, as
+      // OdsBuilder.ingestChecked materializes its raw day) — without
+      // it each consumer would re-run the full raster decode;
+      // ContextCleaner frees the blocks when the frames go
+      // unreferenced
     }.localCheckpoint()
     (decoded.flatMap(_._1), decoded.flatMap(_._2))
   }

@@ -3,6 +3,7 @@ package graft.star
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** DDS star-schema builder — the Spark restatement of the reference's
   * `from_ods_to_dds_pg` DAG (`dags/from_ods_to_dds_pg.py:42-104`,
@@ -22,12 +23,18 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    join plumbing only; no mart exposes them.
   *
   * Scale notes (100 TB design): imputation is a per-date partial aggregate
-  * broadcast back — no wide shuffle of the fact side. Dim builds shuffle
-  * only the distinct natural keys; surrogate ids are assigned by a fully
-  * distributed sort + zipWithIndex (no single-task window, see
-  * [[withSurrogateId]]). The fact build broadcasts only the provably
-  * bounded dim (country); data-scaled dims (song, artist) are joined
-  * unhinted so AQE picks broadcast vs sort-merge from measured sizes.
+  * broadcast back — no wide shuffle of the fact side. Ids are numbered
+  * on one of two paths, chosen by what the input is, not by its size:
+  *  - a whole-corpus dim build ([[dimArtist]], [[dimSong]],
+  *    [[dimCountry]]) shuffles only the distinct natural keys and
+  *    numbers them with a fully distributed sort + zipWithIndex (no
+  *    single-task window, see [[withSurrogateId]]);
+  *  - one load's unseen keys ([[newDimRows]], the daily append) are at
+  *    most a day's distinct new keys: sorted in one Spark task, collected
+  *    and numbered on the driver ([[numberNewKeys]]).
+  * The fact build broadcasts only the provably bounded dim (country);
+  * data-scaled dims (song, artist) are joined unhinted so AQE picks
+  * broadcast vs sort-merge from measured sizes.
   */
 object StarBuilder {
 
@@ -63,6 +70,9 @@ object StarBuilder {
     * the per-partition offset). The index equals the global sorted
     * position whatever the sampled range boundaries are, so ids stay
     * deterministic run-to-run, and no single task ever holds the dim.
+    * The price is three runs of `distinctKeys`' lineage (range sample,
+    * partition sizing, the consumer's own), which only a whole-corpus
+    * build is worth; one load's new keys go through [[numberNewKeys]].
     */
   def withSurrogateId(distinctKeys: DataFrame, idCol: String,
       naturalKey: Seq[String]): DataFrame = {
@@ -86,19 +96,53 @@ object StarBuilder {
     * deterministically within the batch. Existing rows keep their ids
     * forever, so appending these rows is the whole dim update;
     * day-over-day id stability is what lets the fact table reference
-    * dims append-only.
+    * dims append-only. The id base is `existing`'s max id, found by a
+    * scan ([[maxId]]); a caller that knows it cheaper passes it in.
     */
   def newDimRows(existing: DataFrame, candidates: DataFrame,
-      idCol: String, naturalKey: Seq[String]): DataFrame = {
-    val keys = naturalKey.map(col)
+      idCol: String, naturalKey: Seq[String]): DataFrame =
+    newDimRows(existing, candidates, idCol, naturalKey, maxId(existing, idCol))
+
+  /** max(`idCol`) over `dim`'s rows, found by a scan; 0 for an empty dim. */
+  def maxId(dim: DataFrame, idCol: String): Long =
+    dim.agg(coalesce(max(col(idCol)), lit(0L))).head().getLong(0)
+
+  /** [[newDimRows]] numbered from the given id base: the unseen keys get
+    * `idBase+1 … idBase+n` ([[numberNewKeys]]). `idBase` must be the max
+    * id over `existing`'s rows, or ids collide or skip.
+    */
+  def newDimRows(existing: DataFrame, candidates: DataFrame,
+      idCol: String, naturalKey: Seq[String], idBase: Long): DataFrame = {
     // Null-safe anti-join: a NULL key component (all-zero-duration date
     // → NULL imputed duration) must still match its existing dim row, or
     // every replay would mint a fresh id for it.
     val fresh = graft.engine.Upsert.newRows(
-      candidates.select(keys: _*).distinct(), existing, naturalKey)
-    val base = existing.agg(coalesce(max(col(idCol)), lit(0L))).head().getLong(0)
-    withSurrogateId(fresh, idCol, naturalKey)
-      .withColumn(idCol, col(idCol) + base)
+      candidates.select(naturalKey.map(col): _*).distinct(), existing,
+      naturalKey)
+    numberNewKeys(fresh, idCol, naturalKey, base = idBase)
+  }
+
+  /** One load's distinct new keys numbered `base+1 … base+n` in their
+    * natural-key order, in one pass: the keys are sorted in ONE Spark
+    * task and collected, then numbered on the driver. The result is a
+    * local frame of driver-held rows, equal row for row to
+    * `withSurrogateId(fresh, …)` shifted by `base`: the sort is Spark's
+    * own, so NULLS FIRST and UTF-8 byte order of strings hold exactly as
+    * in [[withSurrogateId]] (Scala's UTF-16 `String` order would
+    * disagree, e.g. on "Ａ" vs "🎵"). `fresh` must hold distinct keys and
+    * fit on the driver — a day's unseen keys do; a whole corpus goes
+    * through [[withSurrogateId]].
+    */
+  def numberNewKeys(fresh: DataFrame, idCol: String,
+      naturalKey: Seq[String], base: Long): DataFrame = {
+    val keys = naturalKey.map(col)
+    val sorted = fresh.select(keys: _*).coalesce(1).sortWithinPartitions(keys: _*)
+    val out = StructType(StructField(idCol, LongType, nullable = false) +:
+      sorted.schema.fields)
+    val rows = sorted.collect().toSeq.zipWithIndex.map { case (r, i) =>
+      Row.fromSeq((base + i + 1L) +: r.toSeq)
+    }
+    fresh.sparkSession.createDataFrame(rows.asJava, out)
   }
 
   /** The whole dim after `candidates`: `existing` plus [[newDimRows]]. */

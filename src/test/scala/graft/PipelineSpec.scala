@@ -15,6 +15,23 @@ class PipelineSpec extends AnyFunSuite {
   private val landing = graft.ingest.OdsBuilder.fixtureRoot
   private lazy val wh = Files.createTempDirectory("graft-wh").toString
 
+  /** Land one `Atlantis` chart for `day` under `root`: (song, artist,
+    * duration) tracks ranked in order.
+    */
+  private def landChart(root: String, day: String,
+      tracks: Seq[(String, String, Int)]): Unit = {
+    val json = tracks.zipWithIndex.map { case ((song, artist, dur), i) =>
+      s"""{"name":"$song","duration":"$dur","listeners":"${10 + i}",
+         | "mbid":"m$i","url":"u$i",
+         | "streamable":{"#text":"1","fulltrack":"0"},
+         | "artist":{"name":"$artist","mbid":"am$i","url":"au$i"},
+         | "image":[],"@attr":{"rank":"${i + 1}"}}""".stripMargin
+    }.mkString("""{"tracks":{"track":[""", ",", "]}}")
+    Files.createDirectories(java.nio.file.Paths.get(root, day))
+    Files.writeString(
+      java.nio.file.Paths.get(root, day, s"Atlantis_$day.json"), json)
+  }
+
   test("two daily runs build the warehouse incrementally with stable dim ids") {
     Pipeline.runDaily(spark, landing, wh, "2024-05-01")
     assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(wh)).count() === 33)
@@ -386,5 +403,86 @@ class PipelineSpec extends AnyFunSuite {
         Pipeline.runDaily(spark, landing, whE, "2030-01-01", checked))
       assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
     }
+  }
+
+  test("a dim's id base is the max live id: read from footers after a " +
+      "compaction, scanned past a deletion vector") {
+    import graft.engine.{Compaction, FileStats, Manifest, Upsert}
+    val land = Files.createTempDirectory("graft-landing-idbase").toString
+    val days = Seq("2009-03-01", "2009-03-02", "2009-03-03", "2009-03-04")
+    days.zip(Seq("SongB", "SongC", "SongD", "SongE")).foreach {
+      case (d, song) => landChart(land, d,
+        Seq(("SongA", "ArtA", 200), (song, "ArtB", 100 + d.takeRight(1).toInt)))
+    }
+    val whI = Files.createTempDirectory("graft-wh-idbase").toString
+    val song = Pipeline.dimSongPath(whI)
+    def ids() = Manifest.read(spark, song).select("song_name", "song_id")
+      .as[(String, Long)].collect().toMap
+    def run(d: String) = Pipeline.runDaily(spark, land, whI, d,
+      autoCompactPolicy = Compaction.AutoPolicy(minFiles = 2))
+    run(days(0))
+    run(days(1))
+    // day 2's append made dim_song's second file and the pass folded
+    // the two into one; day 2 added no country, so no country commit
+    assert(Manifest.currentLive(spark, song).size === 1)
+    assert(Manifest.versions(spark, Pipeline.dimCountryPath(whI)).size === 1)
+    val v2 = Manifest.currentVersion(spark, song).get
+    assert(FileStats.liveMax(spark, song, v2, "song_id") === Some(3L))
+    run(days(2))
+    assert(ids()("SongD") === 4L)
+    // a merge-on-read delete of the max-id row leaves a deletion vector:
+    // the footers still say 4, so the base falls back to a scan
+    assert(Upsert.deleteWhereMor(spark, song, col("song_name") === "SongD") === 1L)
+    val v4 = Manifest.currentVersion(spark, song).get
+    assert(Manifest.dvsAsOf(spark, song, v4).nonEmpty)
+    assert(FileStats.liveMax(spark, song, v4, "song_id") === None)
+    val scanned = Manifest.read(spark, song).agg(max("song_id")).head().getLong(0)
+    run(days(3))
+    assert(ids()("SongE") === scanned + 1)
+  }
+
+  test("a steady runDaily day runs at most 28 Spark jobs") {
+    // 41 before the day slice was materialized once, dim ids numbered
+    // in one pass and the artist marts shared one aggregate: ingest 2,
+    // dims 19, fact 6, marts 14. Now: ingest 2, the slice 3, dims 10
+    // (no write for the dim that gains no key), fact 4, marts 9.
+    val land = Files.createTempDirectory("graft-landing-jobs").toString
+    landChart(land, "2009-04-01", Seq(("S1", "A1", 200), ("S2", "A2", 0)))
+    landChart(land, "2009-04-02", Seq(("S1", "A1", 200), ("S3", "A2", 150)))
+    landChart(land, "2009-04-03",
+      Seq(("S1", "A1", 200), ("S4", "A3", 180), ("S5", "A2", 0)))
+    val whJ = Files.createTempDirectory("graft-wh-jobs").toString
+    Seq("2009-04-01", "2009-04-02").foreach(Pipeline.runDaily(spark, land, whJ, _))
+    // the third day adds songs and an artist, but no country
+    val (_, jobs) = TestSpark.jobsDuring(
+      Pipeline.runDaily(spark, land, whJ, "2009-04-03"))
+    assert(jobs.size <= 28, s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+    assert(graft.engine.Manifest.read(spark, Pipeline.dimSongPath(whJ))
+      .count() === 5)
+  }
+
+  test("a checked day runs under reliable checkpointing") {
+    val ckpt = Files.createTempDirectory("graft-ckpt-reliable").toString
+    val whR = Files.createTempDirectory("graft-wh-reliable").toString
+    val landR = Files.createTempDirectory("graft-landing-reliable")
+    val d = "2024-05-01"
+    Files.createDirectories(landR.resolve(d))
+    Files.list(java.nio.file.Paths.get(landing, d)).forEach(f =>
+      Files.copy(f, landR.resolve(d).resolve(f.getFileName.toString)))
+    Files.writeString(landR.resolve(d).resolve(s"Atlantis_$d.json"),
+      """{ "tracks": { "track": [""")
+    spark.sparkContext.setCheckpointDir(ckpt)
+    spark.conf.set(graft.engine.Checkpoints.ConfKey, "reliable")
+    try Pipeline.runDaily(spark, landR.toString, whR, d, checked = true)
+    finally spark.conf.unset(graft.engine.Checkpoints.ConfKey)
+    assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(whR))
+      .count() === 33)
+    assert(spark.read.parquet(s"${Pipeline.quarantinePath(whR)}/day=$d")
+      .select("reason").as[String].collect().toList === List("malformed_json"))
+    // the raw day, the day slice and the artist aggregate went to the
+    // checkpoint directory, not to executor-local blocks
+    val written = Files.walk(java.nio.file.Paths.get(ckpt))
+      .filter(Files.isRegularFile(_)).count()
+    assert(written > 0, s"reliable mode wrote no checkpoint files under $ckpt")
   }
 }

@@ -123,4 +123,28 @@ class StarBuilderSpec extends AnyFunSuite {
     val song = StarBuilder.dimSong(filled).filter($"duration_sec" === 101)
     assert(song.count() === 2) // s1 (imputed to 101) and s3
   }
+
+  test("a load's new keys are numbered exactly as withSurrogateId numbers " +
+      "them, from the same base") {
+    // NULL first, then UTF-8 byte order: "Ａ" (EF BC A1) sorts before
+    // "🎵 song" (F0 9F …), while Java's UTF-16 order puts it after
+    val keys = Seq[(String, java.lang.Long)](
+      ("🎵 song", 200L), ("Ａ", 100L), (null, 100L), ("Ａ", null),
+      ("b", 5L), ("B", 5L), ("", 7L))
+      .toDF("song_name", "duration_sec").repartition(3)
+    val base = 40L
+    val onePass = StarBuilder.numberNewKeys(keys, "song_id",
+      Seq("song_name", "duration_sec"), base)
+    val distributed = StarBuilder.withSurrogateId(keys, "song_id",
+      Seq("song_name", "duration_sec"))
+      .withColumn("song_id", col("song_id") + base)
+    def rows(df: DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(onePass.schema.fieldNames.toSeq === distributed.schema.fieldNames.toSeq)
+    assert(rows(onePass) === rows(distributed))
+    assert(rows(onePass).map(_.head) === (41L to 47L))
+    assert(rows(onePass).map(_(1)).take(4) === Seq(null, "", "B", "b"))
+    val names = rows(onePass).map(_(1))
+    assert(names.indexOf("Ａ") < names.indexOf("🎵 song"))
+  }
 }
